@@ -57,10 +57,20 @@ from pyspark.storagelevel import StorageLevel
 PLAN_ONLY = False
 
 
-def pin_corpus(df: DataFrame) -> DataFrame:
-    """Materialize a CORPUS-PROPORTIONAL multi-consumer relation once,
-    keeping recomputable lineage (persist, not localCheckpoint)."""
+def _persist_pin(df: DataFrame) -> DataFrame:
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     if not PLAN_ONLY:
         df.count()
     return df
+
+
+# The pin shape every call site runs. Modules bind ``pin_corpus`` by
+# name at import, so rebinding ``pin.pin_corpus`` reaches none of them;
+# an A/B harness swaps this instead (tools/ab_pins.py).
+_impl = _persist_pin
+
+
+def pin_corpus(df: DataFrame) -> DataFrame:
+    """Materialize a CORPUS-PROPORTIONAL multi-consumer relation once,
+    keeping recomputable lineage (persist, not localCheckpoint)."""
+    return _impl(df)

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.frames import local_frame
+
 CHANNELS = ("click", "error", "signup", "view")
 CONVERSION = "purchase"
 ITERS = 12
@@ -142,7 +144,8 @@ def markov_removal_attribution(events: DataFrame) -> DataFrame:
         )
         out.append((v, base_p, removed_p, effect))
     spark = events.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "channel string, base_conv_q6 long, removed_conv_q6 long, "
         "removal_effect_q6 long",

@@ -18,6 +18,9 @@ scale structure is the important part:
   same shape as Lloyd iterations in similarity/kmeans; vocab state is
   localCheckpoint-truncated so round R's plan does not replay rounds
   1..R-1.
+- The merge table handed back to Spark is an Arrow-backed local frame
+  (functions/frames.py): it is built in the JVM, so ordering and
+  writing it runs no Python worker.
 
 The result (the merge table itself) is deterministic, so the DuckDB
 oracle reproduces the whole iteration as K chained CTE stages — pair
@@ -30,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.frames import local_frame
 from p6__mapreduce_spark.functions.text import tokens_expr
 
 
@@ -126,8 +130,8 @@ def bpe_learn_merges(
     learned BPE merges in training order. Stops early if no adjacent
     pair remains."""
     merges, _ = _train(docs, num_merges)
-    return spark.createDataFrame(
-        merges, "merge_idx int, lhs string, rhs string, pair_count long"
+    return local_frame(
+        spark, merges, "merge_idx int, lhs string, rhs string, pair_count long"
     ).orderBy("merge_idx")
 
 

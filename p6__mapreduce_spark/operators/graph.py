@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from p6__mapreduce_spark.functions.frames import local_frame
 from p6__mapreduce_spark.functions.pin import pin_corpus
 
 SCALE = 1_000_000_000_000  # rank fixed-point scale (1e12)
@@ -92,8 +93,8 @@ def nation_trade_pagerank(
     nn = len(node_rows)
     spark = nation.sparkSession
     if nn == 0:
-        return spark.createDataFrame(
-            [], "nation_key long, n_name string, pr_q long, out_w_q long"
+        return local_frame(
+            spark, [], "nation_key long, n_name string, pr_q long, out_w_q long"
         ).orderBy(F.desc("pr_q"), "nation_key")
     ranks = {node: _round_half_away(float(SCALE) / float(nn)) for node, _ in node_rows}
     for _ in range(iters):
@@ -114,8 +115,8 @@ def nation_trade_pagerank(
     out = [
         (node, name, ranks[node], outw.get(node, 0)) for node, name in node_rows
     ]
-    return spark.createDataFrame(
-        out, "nation_key long, n_name string, pr_q long, out_w_q long"
+    return local_frame(
+        spark, out, "nation_key long, n_name string, pr_q long, out_w_q long"
     ).orderBy(F.desc("pr_q"), "nation_key")
 
 
@@ -282,8 +283,8 @@ def nation_trade_hits(
         (node, name, hubs.get(node, 0), auths.get(node, 0))
         for node, name in node_rows
     ]
-    return spark.createDataFrame(
-        out, "nation_key long, n_name string, hub_q6 long, auth_q6 long"
+    return local_frame(
+        spark, out, "nation_key long, n_name string, hub_q6 long, auth_q6 long"
     ).orderBy(F.col("hub_q6").desc(), "nation_key")
 
 

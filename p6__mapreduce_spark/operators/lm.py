@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.frames import local_frame
+
 
 def kneser_ney_bigram(docs: DataFrame, min_pair_count: int = 2) -> DataFrame:
     """(w1, w2, c_pair, c_ctx, n1_w1, ncont_w2, pkn): the KN-smoothed
@@ -240,8 +242,6 @@ def lm_greedy_generation(docs: DataFrame, steps: int = GEN_STEPS) -> DataFrame:
     count that selected this token (the seed's row reports its
     unigram count); a context with no successor ends the rollout
     early, exactly as the retired empty-join chain did."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from p6__mapreduce_spark.dedup.jaccard import shingle_postings
 
     arr = F.split("shingle", " ")
@@ -284,14 +284,9 @@ def lm_greedy_generation(docs: DataFrame, steps: int = GEN_STEPS) -> DataFrame:
                 break  # dead-end context: rollout ends early
             token = hit[0]
             rows.append((k, token, hit[1]))
-    schema = StructType(
-        [
-            StructField("step", LongType()),
-            StructField("token", StringType()),
-            StructField("in_count", LongType()),
-        ]
-    )
-    return docs.sparkSession.createDataFrame(rows, schema).orderBy("step")
+    return local_frame(
+        docs.sparkSession, rows, "step long, token string, in_count long"
+    ).orderBy("step")
 
 
 def lm_generation_oracle_sql(steps: int = GEN_STEPS) -> str:

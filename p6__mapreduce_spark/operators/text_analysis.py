@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from p6__mapreduce_spark.functions.pin import pin_corpus
 
+from p6__mapreduce_spark.functions.frames import local_frame
 from p6__mapreduce_spark.functions.hashing import POLY_BASE, POLY_MOD, poly_hash_expr
 from p6__mapreduce_spark.functions.text import tokens_expr
 
@@ -354,7 +355,7 @@ def lexicon_hits(docs: DataFrame, lexicon: list[str]) -> DataFrame:
     by a left join (clean = true).
     """
     spark = docs.sparkSession
-    lex = spark.createDataFrame([(t,) for t in sorted(set(lexicon))], "term string")
+    lex = local_frame(spark, [(t,) for t in sorted(set(lexicon))], "term string")
     tok = docs.select("doc_id", F.explode(tokens_expr("text")).alias("term"))
     hits = (
         tok.join(F.broadcast(lex), "term")

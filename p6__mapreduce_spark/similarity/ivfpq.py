@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.frames import local_frame
 from p6__mapreduce_spark.similarity.kmeans import (
     _best_sql,
     _matrix_sql,
@@ -195,8 +196,8 @@ def knn_ivfpq(
                     dq = sum((a - b) * (a - b) for a, b in zip(sub, cent))
                     rows.append((int(qr.vec_id), ci, s, c, int(dq)))
     spark = embeddings.sparkSession
-    tables = spark.createDataFrame(
-        rows, "query_id long, cell long, subspace long, code long, dq long"
+    tables = local_frame(
+        spark, rows, "query_id long, cell long, subspace long, code long, dq long"
     )
 
     scored = (

@@ -50,6 +50,8 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.frames import local_frame
+
 QUANT = 1_000_000
 
 
@@ -244,7 +246,7 @@ def kmeans_lloyd(
         for c, cent in enumerate(cents)
         for dim, coord in enumerate(cent)
     ]
-    cent_df = spark.createDataFrame(cent_rows, "cluster_id long, dim long, coord_q long")
+    cent_df = local_frame(spark, cent_rows, "cluster_id long, dim long, coord_q long")
     return (
         cent_df.join(F.broadcast(final_stats), "cluster_id", "left")
         .select(

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.frames import local_frame
+
 Q4 = 10_000  # 1e-4 coordinate quantization (int64 headroom for n * q^2)
 SCALE6 = 1_000_000.0
 ITERS = 15
@@ -131,8 +133,8 @@ def pca_top_component(emb: DataFrame, *, vec_col: str = "embedding") -> DataFram
     ratio = eigval / float(tr) if (eigval is not None and tr != 0) else None
     spark = emb.sparkSession
     out = [(int(i), int(v[i]), eigval, ratio) for i in dims]
-    return spark.createDataFrame(
-        out, "dim long, loading_q6 long, eigval_norm double, explained_ratio double"
+    return local_frame(
+        spark, out, "dim long, loading_q6 long, eigval_norm double, explained_ratio double"
     ).orderBy("dim")
 
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.frames import local_frame
 from p6__mapreduce_spark.similarity.kmeans import (
     QUANT,
     _iteration_sql,
@@ -371,8 +372,8 @@ def knn_pq(
                 dist = sum((a - b) * (a - b) for a, b in zip(sub, cent))
                 rows.append((int(qr.vec_id), s, c, int(dist)))
     spark = embeddings.sparkSession
-    tables = spark.createDataFrame(
-        rows, "query_id long, subspace long, code long, dq long"
+    tables = local_frame(
+        spark, rows, "query_id long, subspace long, code long, dq long"
     )
 
     scored = (

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.frames import local_frame
 from p6__mapreduce_spark.functions.vectors import dot_product, l2_norm
 
 Q = 1_000_000_000_000  # 1e12 fixed-point scale for cosines / distances
@@ -107,7 +108,7 @@ def mmr_diversified_topk(
     chosen: list[tuple[int, int, int, int]] = []  # (step, id, rel_q, mmr_q)
     first = pool.orderBy(F.desc("rel_q"), "vec_id").select("vec_id", "rel_q").first()
     if first is None:  # empty pool — mirror the oracle's recursion, which
-        return spark.createDataFrame([], schema)  # simply never starts
+        return local_frame(spark, [], schema)  # simply never starts
     chosen.append((1, first["vec_id"], first["rel_q"], lam_num * first["rel_q"]))
     for step in range(2, k + 1):
         sel_ids = [c[1] for c in chosen]
@@ -129,7 +130,7 @@ def mmr_diversified_topk(
         if pick is None:  # pool exhausted before k picks — stop, return
             break  # the shorter selection (oracle's step < k recursion stops too)
         chosen.append((step, pick["ida"], pick["rel_q"], pick["score"]))
-    return spark.createDataFrame(chosen, schema).orderBy("step")
+    return local_frame(spark, chosen, schema).orderBy("step")
 
 
 def mmr_oracle_sql(
@@ -207,7 +208,7 @@ def kcenter_coreset(embeddings: DataFrame, *, k: int = 8) -> DataFrame:
     schema = "step long, center_id long, radius_q long"
     seed = embeddings.orderBy("vec_id").select("vec_id", "embedding").first()
     if seed is None:  # empty table — the oracle's recursion never seeds
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     centers: list[tuple[int, int, int]] = [(1, seed["vec_id"], 0)]
     center_vec = [float(x) for x in seed["embedding"]]
 
@@ -235,7 +236,7 @@ def kcenter_coreset(embeddings: DataFrame, *, k: int = 8) -> DataFrame:
                 F.col("mind_q"), _d2_q("v", F.lit(cvec).cast("array<double>"))
             ).alias("mind_q"),
         ).localCheckpoint(eager=True)
-    return spark.createDataFrame(centers, schema).orderBy("step")
+    return local_frame(spark, centers, schema).orderBy("step")
 
 
 def kcenter_oracle_sql(*, k: int = 8) -> str:

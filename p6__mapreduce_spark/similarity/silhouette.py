@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.frames import local_frame
 from p6__mapreduce_spark.functions.vectors import dot_product
 
 Q12 = 1_000_000_000_000
@@ -40,7 +41,8 @@ def silhouette_by_cluster(
     centroid index (lowest wins); a point equidistant to two centroids
     scores s = 0 (b = a) — visible, not dropped."""
     spark = embeddings.sparkSession
-    cgrid = spark.createDataFrame(
+    cgrid = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cid int, cvec array<double>",
     )

@@ -39,14 +39,10 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
-
-from p6__mapreduce_spark.streaming.partitions import (
-    restore_stream_partitions,
-    set_stream_partitions,
-)
 from pyspark.sql import functions as F
 
 from p6__mapreduce_spark.sources.sinks import publish_parquet_atomic
+from p6__mapreduce_spark.streaming.partitions import stream_partitions
 
 KEYS = ("user_id", "event_type")
 
@@ -152,13 +148,14 @@ def run_foreachbatch_idempotent_upsert(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    _sp_old = set_stream_partitions(spark, src)  # volume-derived state partitions
-    query = stream.writeStream.foreachBatch(_sink).start()
     try:
-        query.processAllAvailable()
+        with stream_partitions(spark, src):  # volume-derived state partitions
+            query = stream.writeStream.foreachBatch(_sink).start()
+            try:
+                query.processAllAvailable()
+            finally:
+                query.stop()
     finally:
-        query.stop()
-        restore_stream_partitions(spark, _sp_old)
         shutil.rmtree(src, ignore_errors=True)
 
     # redelivery proof: distributed checksum before and after
@@ -166,6 +163,7 @@ def run_foreachbatch_idempotent_upsert(
     # never the target table (checksum-based per the 100 TB contract)
     before = table_checksum(spark.read.parquet(target))
     if last_batch_rows:  # redelivery: re-apply the final batch verbatim
+        # list path on purpose: only it reads collect()'s naive local datetimes back exactly
         replay = spark.createDataFrame(last_batch_rows, schema=schema)
         _merge_latest(target, replay, spark)
     after = table_checksum(spark.read.parquet(target))

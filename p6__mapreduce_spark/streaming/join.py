@@ -21,14 +21,11 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-
-from p6__mapreduce_spark.streaming.partitions import (
-    restore_stream_partitions,
-    set_stream_partitions,
-)
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.frames import local_frame
 from p6__mapreduce_spark.sources.readers import load_table
+from p6__mapreduce_spark.streaming.partitions import stream_partitions
 
 
 def run_streaming_click_purchase_join(
@@ -104,15 +101,14 @@ def run_streaming_click_purchase_join(
             F.unix_micros("purchase_ts").alias("purchase_us"),
         )
         name = f"stream_join_{uuid.uuid4().hex[:8]}"
-        _sp_old = set_stream_partitions(spark, src)  # volume-derived state partitions
-        query = (
-            joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-            restore_stream_partitions(spark, _sp_old)
+        with stream_partitions(spark, src):  # volume-derived state partitions
+            query = (
+                joined.writeStream.outputMode("append").format("memory").queryName(name).start()
+            )
+            try:
+                query.processAllAvailable()
+            finally:
+                query.stop()
         # the memory sink holds the rows; the staging dir can go away
         return spark.table(name).orderBy("click_id", "purchase_id")
     finally:
@@ -155,7 +151,8 @@ def run_streaming_click_purchase_left_join(
 
     src = tempfile.mkdtemp(prefix="p6_stream_ljoin_")
     try:
-        sentinel = spark.createDataFrame(
+        sentinel = local_frame(
+            spark,
             [(-1, -1, "click"), (-2, -1, "purchase")],
             "event_id long, user_id long, event_type string",
         ).withColumn(
@@ -213,15 +210,14 @@ def run_streaming_click_purchase_left_join(
             F.unix_micros("purchase_ts").alias("purchase_us"),
         )
         name = f"stream_ljoin_{uuid.uuid4().hex[:8]}"
-        _sp_old = set_stream_partitions(spark, src)  # volume-derived state partitions
-        query = (
-            joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-            restore_stream_partitions(spark, _sp_old)
+        with stream_partitions(spark, src):  # volume-derived state partitions
+            query = (
+                joined.writeStream.outputMode("append").format("memory").queryName(name).start()
+            )
+            try:
+                query.processAllAvailable()
+            finally:
+                query.stop()
         return (
             spark.table(name)
             .filter(F.col("click_id") >= 0)
@@ -313,7 +309,8 @@ def run_streaming_click_purchase_full_join(
 
     src = tempfile.mkdtemp(prefix="p6_stream_fjoin_")
     try:
-        sentinel = spark.createDataFrame(
+        sentinel = local_frame(
+            spark,
             [(-1, -1, "click"), (-2, -1, "purchase")],
             "event_id long, user_id long, event_type string",
         ).withColumn(
@@ -369,15 +366,14 @@ def run_streaming_click_purchase_full_join(
             F.unix_micros("purchase_ts").alias("purchase_us"),
         )
         name = f"stream_fjoin_{uuid.uuid4().hex[:8]}"
-        _sp_old = set_stream_partitions(spark, src)  # volume-derived state partitions
-        query = (
-            joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-            restore_stream_partitions(spark, _sp_old)
+        with stream_partitions(spark, src):  # volume-derived state partitions
+            query = (
+                joined.writeStream.outputMode("append").format("memory").queryName(name).start()
+            )
+            try:
+                query.processAllAvailable()
+            finally:
+                query.stop()
         return (
             spark.table(name)
             # NULL-safe sentinel drop: outer rows carry NULL ids

@@ -34,13 +34,21 @@ from __future__ import annotations
 import math
 import os
 from contextlib import contextmanager
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
 _TARGET_BYTES = 32 << 20  # ~32 MB of ingested input per state partition
 
 
-def _input_bytes(path: str) -> int:
+def _input_bytes(path: str) -> int | None:
+    """Bytes under a local file or directory; ``None`` for a non-local
+    URI (``hdfs://``, ``s3a://``, ...), whose size ``os`` cannot see."""
+    url = urlparse(path)
+    if url.scheme == "file":
+        path = url.path
+    elif url.scheme and "://" in path:
+        return None
     if os.path.isfile(path):
         return os.path.getsize(path)
     total = 0
@@ -54,25 +62,14 @@ def _input_bytes(path: str) -> int:
 
 
 def stream_shuffle_partitions(spark: SparkSession, *paths: str) -> int:
-    """Partition count for a streaming query ingesting ``paths``."""
-    nbytes = sum(_input_bytes(p) for p in paths)
+    """Partition count for a streaming query ingesting ``paths``. A
+    non-local input keeps the session's shuffle partitions: counting
+    it as 0 bytes would shrink a remote stream to one state partition."""
+    sizes = [_input_bytes(p) for p in paths]
+    if None in sizes:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
     cap = 4 * spark.sparkContext.defaultParallelism
-    return max(1, min(cap, math.ceil(nbytes / _TARGET_BYTES)))
-
-
-def set_stream_partitions(spark: SparkSession, *paths: str) -> str:
-    """Imperative form of :func:`stream_partitions` for runners whose
-    start/stop region is already deeply nested: sets the volume-derived
-    count and returns the previous session value for the paired
-    :func:`restore_stream_partitions` in the runner's ``finally``."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(stream_shuffle_partitions(spark, *paths)))
-    return old
-
-
-def restore_stream_partitions(spark: SparkSession, old: str) -> None:
-    spark.conf.set("spark.sql.shuffle.partitions", old)
+    return max(1, min(cap, math.ceil(sum(sizes) / _TARGET_BYTES)))
 
 
 @contextmanager

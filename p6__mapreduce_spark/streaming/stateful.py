@@ -69,10 +69,7 @@ def run_streaming_running_totals(spark, events_parquet: str):
 
     from pyspark.sql import functions as F
 
-    from p6__mapreduce_spark.streaming.partitions import (
-        restore_stream_partitions,
-        set_stream_partitions,
-    )
+    from p6__mapreduce_spark.streaming.partitions import stream_partitions
 
     src = tempfile.mkdtemp(prefix="p6_stream_totals_")
     try:
@@ -90,19 +87,18 @@ def run_streaming_running_totals(spark, events_parquet: str):
         stream = (
             spark.readStream.schema(base.schema).option("maxFilesPerTrigger", 1).parquet(src)
         )
-        _sp_old = set_stream_partitions(spark, src)  # volume-derived state partitions
-        query = (
-            user_running_totals(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-            restore_stream_partitions(spark, _sp_old)
+        with stream_partitions(spark, src):  # volume-derived state partitions
+            query = (
+                user_running_totals(stream)
+                .writeStream.outputMode("update")
+                .format("memory")
+                .queryName(name)
+                .start()
+            )
+            try:
+                query.processAllAvailable()
+            finally:
+                query.stop()
         from pyspark.sql import Window
 
         w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))

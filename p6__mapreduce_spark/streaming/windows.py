@@ -11,13 +11,10 @@ late-data policy differ.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from p6__mapreduce_spark.streaming.partitions import (
-    restore_stream_partitions,
-    set_stream_partitions,
-    stream_partitions,
-)
 from pyspark.sql import functions as F
+
+from p6__mapreduce_spark.functions.frames import local_frame
+from p6__mapreduce_spark.streaming.partitions import stream_partitions
 
 
 def _window_agg(events: DataFrame, minutes: int) -> DataFrame:
@@ -199,34 +196,33 @@ def run_streaming_late_drop(
             .agg(F.count(F.lit(1)).alias("n_events"))
             .select(F.unix_timestamp(F.col("w.start")).alias("window_start"), "n_events")
         )
-        _sp_old = set_stream_partitions(spark, src)  # volume-derived state partitions
-        query = (
-            agg.writeStream.outputMode("append").format("memory").queryName(name).start()
-        )
-        try:
-            query.processAllAvailable()
-            # The oracle for this query counts batch-1's below-watermark
-            # rows, which is only correct while the engine routes them
-            # into fresh state instead of dropping them. Fail fast with a
-            # clear message if a Spark build ever applies the standard
-            # late-row drop — a silent hash-mismatch downstream would be
-            # much harder to diagnose than this assertion.
-            dropped = sum(
-                op.get("numRowsDroppedByWatermark", 0)
-                for progress in query.recentProgress
-                for op in progress.get("stateOperators", [])
+        with stream_partitions(spark, src):  # volume-derived state partitions
+            query = (
+                agg.writeStream.outputMode("append").format("memory").queryName(name).start()
             )
-            if dropped:
-                raise AssertionError(
-                    f"Spark dropped {dropped} below-watermark input rows; this "
-                    "build applies the standard late-row drop, so the "
-                    "append_finalized_windows_streaming oracle (which counts "
-                    "those rows) no longer models the engine. Re-derive the "
-                    "oracle from the emission-frontier property only."
+            try:
+                query.processAllAvailable()
+                # The oracle for this query counts batch-1's below-watermark
+                # rows, which is only correct while the engine routes them
+                # into fresh state instead of dropping them. Fail fast with a
+                # clear message if a Spark build ever applies the standard
+                # late-row drop — a silent hash-mismatch downstream would be
+                # much harder to diagnose than this assertion.
+                dropped = sum(
+                    op.get("numRowsDroppedByWatermark", 0)
+                    for progress in query.recentProgress
+                    for op in progress.get("stateOperators", [])
                 )
-        finally:
-            query.stop()
-            restore_stream_partitions(spark, _sp_old)
+                if dropped:
+                    raise AssertionError(
+                        f"Spark dropped {dropped} below-watermark input rows; this "
+                        "build applies the standard late-row drop, so the "
+                        "append_finalized_windows_streaming oracle (which counts "
+                        "those rows) no longer models the engine. Re-derive the "
+                        "oracle from the emission-frontier property only."
+                    )
+            finally:
+                query.stop()
         return spark.table(name).orderBy("window_start")
     finally:
         shutil.rmtree(src, ignore_errors=True)
@@ -263,8 +259,8 @@ def run_streaming_session_windows(
     try:
         base = spark.read.parquet(events_parquet).select("event_id", "user_id", "ts")
         cut = F.lit(cutoff).cast("timestamp")
-        sentinel = spark.createDataFrame(
-            [(-1, -1)], "event_id long, user_id long"
+        sentinel = local_frame(
+            spark, [(-1, -1)], "event_id long, user_id long"
         ).select(
             "event_id", "user_id", F.lit("2024-06-01 00:00:00").cast("timestamp").alias("ts")
         )
@@ -304,15 +300,14 @@ def run_streaming_session_windows(
                 "n_events",
             )
         )
-        _sp_old = set_stream_partitions(spark, src)  # volume-derived state partitions
-        query = (
-            agg.writeStream.outputMode("append").format("memory").queryName(name).start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-            restore_stream_partitions(spark, _sp_old)
+        with stream_partitions(spark, src):  # volume-derived state partitions
+            query = (
+                agg.writeStream.outputMode("append").format("memory").queryName(name).start()
+            )
+            try:
+                query.processAllAvailable()
+            finally:
+                query.stop()
         return (
             spark.table(name)
             .filter(F.col("user_id") != -1)

@@ -3,6 +3,7 @@ with its batch twin once all input is processed."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from p6__mapreduce_spark.sources.readers import load_table
@@ -310,8 +311,6 @@ def test_transform_with_state_running_counts(spark):
     import shutil
     import tempfile
 
-    import pytest
-
     try:
         from google.protobuf import descriptor  # noqa: F401
     except ImportError:
@@ -521,3 +520,66 @@ def test_full_outer_stream_join_includes_orphans_both_sides(spark, tmp_path):
     # orphan purchases keep their user via the coalesce
     u = {r.purchase_id: r.user_id for r in got if r.click_id is None}
     assert u == {3: 3, 5: 4}
+
+
+def _runners():
+    import os
+
+    from p6__mapreduce_spark.streaming import dedup, idempotent, join, stateful, windows
+
+    events = os.path.join(SF, "events.parquet")
+    return {
+        "stream_to_completion": lambda s: windows.run_stream_to_completion(s, events),
+        "late_drop": lambda s: windows.run_streaming_late_drop(s, events),
+        "session_windows": lambda s: windows.run_streaming_session_windows(s, events),
+        "running_totals": lambda s: stateful.run_streaming_running_totals(s, events),
+        "idempotent_upsert": lambda s: idempotent.run_foreachbatch_idempotent_upsert(s, events),
+        "dedup": lambda s: dedup.run_streaming_dedup(s, events),
+        "inner_join": lambda s: join.run_streaming_click_purchase_join(s, SF),
+        "left_join": lambda s: join.run_streaming_click_purchase_left_join(s, SF),
+        "full_join": lambda s: join.run_streaming_click_purchase_full_join(s, SF),
+    }
+
+
+@pytest.mark.parametrize("runner", sorted(_runners()))
+def test_failed_start_restores_shuffle_partitions(spark, monkeypatch, runner):
+    """The volume-derived state partitions are scoped to the stream: a
+    start() that throws must not leave them as the session's setting."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    def refuse(self, *args, **kwargs):
+        raise RuntimeError("start refused")
+
+    monkeypatch.setattr(DataStreamWriter, "start", refuse)
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    spark.conf.set(key, "7")  # differs from any volume-derived count here
+    try:
+        with pytest.raises(RuntimeError, match="start refused"):
+            _runners()[runner](spark)
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, session_value)
+
+
+def test_non_local_input_keeps_session_partitions(spark, tmp_path):
+    from p6__mapreduce_spark.streaming.partitions import (
+        _input_bytes,
+        stream_partitions,
+        stream_shuffle_partitions,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    session_default = int(spark.conf.get(key))
+    assert _input_bytes("hdfs://namenode:8020/events") is None
+    assert _input_bytes("s3a://bucket/events/") is None
+    assert stream_shuffle_partitions(spark, "hdfs://namenode:8020/events") == session_default
+    # a remote path next to a local one still cannot be sized
+    local = tmp_path / "batch.parquet"
+    local.write_bytes(b"x" * 1000)
+    assert stream_shuffle_partitions(spark, str(local), "s3a://bucket/events") == session_default
+    with stream_partitions(spark, "hdfs://namenode:8020/events"):
+        assert int(spark.conf.get(key)) == session_default
+    # local inputs, with or without a file:// scheme, are still sized
+    assert _input_bytes(f"file://{local}") == 1000
+    assert stream_shuffle_partitions(spark, str(local)) == 1

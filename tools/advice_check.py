@@ -209,6 +209,29 @@ RESOLUTIONS: list[dict] = [
         "must_match": r"collected ONCE",
         "must_not_match": r"steps \+ 1 take\(1\) jobs",
     },
+    # ---- round-11 ADVICE ----
+    {
+        "name": "r11-ab-pins-rebinding-ineffective",
+        "file": "tools/ab_pins.py",
+        "match": "Monkeypatching pin.pin_corpus is ineffective",
+        "status": "fixed",
+        # pin_corpus dispatches through pin._impl, which the A/B arms
+        # swap; tests/test_pin.py proves a swap reaches queries.py's
+        # by-name import
+        "must_match": r"pin\._impl = arm_pin",
+        "must_not_match": r"pin\.pin_corpus = ",
+    },
+    {
+        "name": "r11-stream-partitions-conf-leak",
+        "file": "p6__mapreduce_spark/streaming/join.py",
+        "match": "set_stream_partitions is called before writeStream.start()",
+        "status": "fixed",
+        # every runner scopes the conf with the stream_partitions
+        # context manager; the imperative pair is deleted and
+        # tests/test_streaming.py fails start() in each runner
+        "must_match": r"with stream_partitions\(spark, src\)",
+        "must_not_match": r"set_stream_partitions",
+    },
 ]
 
 _ITEM_RE = re.compile(
