@@ -8,9 +8,15 @@ Partitioner (key -> partition id).
 
 Spark lowering (SURVEY.md §3 entry point C):
 
-  read.text -> mapInPandas(map)           # mapper threads -> input-split tasks
-            -> repartition(P, part_expr)  # MR_Emit's locked sorted insert -> exchange
-            -> applyInPandas(reduce)      # reducer threads -> shuffle-partition tasks
+  read.text -> mapInPandas(map)               # mapper threads -> input-split tasks
+            -> repartitionById(P, bucket)     # MR_Emit's insert into partition[bucket]
+            -> sortWithinPartitions(key)      # MR_Emit's sorted-list insert
+            -> mapInPandas(partition scan)    # reducer p scans partition p in key order
+
+Partition *p* of the exchange holds exactly the keys whose partitioner
+value is *p*, sorted by key, so reading the partitions in order yields
+the reference's (partition, key) output order with no global sort and
+each Python function runs once per line / per key.
 
 The map->reduce barrier (``mapreduce.c:196-207`` joins all mappers
 before reducers start) is Spark's shuffle stage boundary. Arbitrary
@@ -21,7 +27,7 @@ for clients that genuinely need imperative per-group logic.
 
 Thread counts (num_mappers / num_reducers) are accepted for API parity
 but intentionally ignored: Spark's scheduler owns task parallelism.
-num_partitions maps to the shuffle width of the reduce exchange.
+num_partitions maps to the width of the reduce exchange.
 """
 
 from __future__ import annotations
@@ -40,7 +46,7 @@ from p6__mapreduce_spark.sources.readers import read_lines
 MapFn = Callable[[str], Iterable[tuple[str, str]]]
 # Reducer: (key, value iterator) -> iterable of output lines
 ReduceFn = Callable[[str, Iterator[str]], Iterable[str]]
-# Partitioner: key column -> partition/bucket expression
+# Partitioner: (key column, P) -> partition id in [0, P)
 PartitionExpr = Callable[[Column, int], Column]
 
 
@@ -48,8 +54,8 @@ def hash_partitioner(key: Column, num_partitions: int) -> Column:
     """Default partitioner (reference djb2, ``mapreduce.c:260-266``).
 
     Placement is unobservable in every reference test (SURVEY.md
-    §2.3#6), so we use Spark's native hash shuffle: pmod(hash(key), n)
-    keeps the expression JVM-side. djb2 itself is available in
+    §2.3#6), so Spark's Murmur3 ``pmod(hash(key), n)`` stands in for
+    djb2 and keeps the expression JVM-side. djb2 itself is available in
     ``functions.hashing.djb2`` for driver-side parity checks.
     """
     return F.pmod(F.hash(key), F.lit(num_partitions))
@@ -71,7 +77,6 @@ class MapReduceJob:
     # accepted for reference API parity; Spark's scheduler owns these
     num_mappers: int | None = None
     num_reducers: int | None = None
-    sort_within_partition: bool = True
 
 
 def _map_phase(lines: DataFrame, map_fn: MapFn) -> DataFrame:
@@ -102,9 +107,11 @@ def _reduce_phase(pairs: DataFrame, reduce_fn: ReduceFn) -> DataFrame:
     semantics don't depend on batch size. Value order within a key is
     unspecified — exactly like the reference under >1 mapper thread.
 
-    Requires ``pairs`` to already be partitioned by key (mr_run's
-    repartition guarantees every occurrence of a key lands in one
-    partition).
+    Requires ``pairs`` to be partitioned by key: mr_run's partition-id
+    exchange puts every occurrence of a key in its bucket's partition,
+    and the ``sortWithinPartitions`` here makes each group contiguous.
+    ``mapInPandas`` keeps the partitioning, so the output stays in
+    (partition, key) order.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -145,19 +152,18 @@ def mr_run(
 
     ``source`` is a lines DataFrame (``value: string``) or text path(s)
     — paths become the reference's multi-file UNION ALL work queue.
-    Output is globally ordered (partition bucket, key) like the
-    reference's single-reducer partition scan order
-    (``mapreduce.c:131-146``).
+    Output partition *p* holds bucket *p* in key order, so the result
+    is ordered (bucket, key) like the reference's partition scan
+    (``mapreduce.c:131-146``). ``job.partitioner`` must return an int
+    in ``[0, num_partitions)``; ``repartitionById`` takes other values
+    modulo ``num_partitions`` and sends nulls to partition 0.
     """
     lines = source if isinstance(source, DataFrame) else read_lines(spark, source)
     pairs = _map_phase(lines, job.map_fn)
-    bucket = job.partitioner(F.col("key"), job.num_partitions).cast("long")
-    pairs = pairs.repartition(job.num_partitions, bucket)
-    reduced = _reduce_phase(pairs, job.reduce_fn)
-    if job.sort_within_partition:
-        bucket_out = job.partitioner(F.col("key"), job.num_partitions).cast("long")
-        reduced = reduced.orderBy(bucket_out, F.col("key"))
-    return reduced
+    # repartitionById requires INT (a bigint id is a type error)
+    bucket = job.partitioner(F.col("key"), job.num_partitions).cast("int")
+    pairs = pairs.repartitionById(job.num_partitions, bucket)
+    return _reduce_phase(pairs, job.reduce_fn)
 
 
 def MR_Run(
@@ -178,7 +184,9 @@ def MR_Run(
     work queue, shuffle partitions replace reducer threads).
     ``partitioner`` may be "hash" (MR_DefaultHashPartition analog),
     "range" (MR_SortedPartition analog), or a (key_col, n) -> Column
-    callable.
+    callable returning an int in ``[0, n)``, the reference's
+    partition-array index; values outside it are taken modulo ``n`` and
+    nulls go to partition 0 (``repartitionById``'s placement).
     """
     part: PartitionExpr
     if partitioner == "hash":

@@ -177,8 +177,8 @@ def q_range_bucket_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_mr_facade_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O10 MR_Run facade running the wordcount client end-to-end
-    (mapreduce.h:17-20): mapInPandas map -> hash repartition ->
-    applyInPandas reduce."""
+    (mapreduce.h:17-20): mapInPandas map -> partition-id exchange ->
+    partition-scan reduce. Output is in (hash bucket, key) order."""
     lines = load_table(spark, sf_dir, "orders").select(F.col("o_custkey").cast("string").alias("value"))
     return mr_run(spark, lines, wordcount_job(num_partitions=8)).select("key", "out")
 

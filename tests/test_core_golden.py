@@ -11,8 +11,17 @@ from collections import Counter
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from p6__mapreduce_spark.operators.core import distinct_sorted, line_count, range_bucket_sort
-from p6__mapreduce_spark.operators.mapreduce import mr_run, sort_job, wordcount_job
+from p6__mapreduce_spark.operators.mapreduce import (
+    MapReduceJob,
+    hash_partitioner,
+    mr_run,
+    range_partitioner,
+    sort_job,
+    wordcount_job,
+)
 from p6__mapreduce_spark.sources.readers import read_lines
 from tests import conftest as fx
 
@@ -89,8 +98,11 @@ def test_multifile_union(spark, tmp_path):
 def test_facade_wordcount_matches_native(spark):
     lines = fx.f2_words()
     df = fx.lines_df(spark, lines)
-    facade = {(r.key, int(r.out)) for r in mr_run(spark, df, wordcount_job(4)).collect()}
-    native = {(r.key, r.cnt) for r in line_count(df).collect()}
+    # hash buckets, then key order within a bucket: the native sorted
+    # counts re-sorted by the same bucket expression
+    facade = [(r.key, int(r.out)) for r in mr_run(spark, df, wordcount_job(4)).collect()]
+    bucketed = line_count(df).select("key", "cnt", hash_partitioner(F.col("key"), 4).alias("bucket"))
+    native = [(r.key, r.cnt) for r in bucketed.orderBy("bucket", "key").collect()]
     assert facade == native
 
 
@@ -100,6 +112,59 @@ def test_facade_sort_matches_reference_order(spark, p):
     got = [r.key for r in mr_run(spark, fx.lines_df(spark, lines), sort_job(p)).collect()]
     want = [k for _, k in sorted({(u32_bucket(k, p), k) for k in lines})]
     assert got == want
+
+
+@pytest.mark.parametrize("p", [1, 3, 8])
+@pytest.mark.parametrize("partitioner", [hash_partitioner, range_partitioner])
+def test_facade_calls_map_once_per_line_reduce_once_per_key(spark, partitioner, p):
+    # 37 keys spread over the uint32 range so every range bucket is used;
+    # interleaved so a key's lines are not adjacent in the input
+    keys = [str(i * 116_000_000) for i in range(37)]
+    lines = [k for i, k in enumerate(keys) for _ in range(i % 3 + 1)]
+    lines = lines[1::2] + lines[::2]
+    map_calls = spark.sparkContext.accumulator(0)
+    reduce_calls = spark.sparkContext.accumulator(0)
+
+    def map_fn(line):
+        map_calls.add(1)
+        yield (line, "1")
+
+    def reduce_fn(key, values):
+        reduce_calls.add(1)
+        yield f"n={sum(int(v) for v in values)}"
+        yield "end"
+
+    job = MapReduceJob(map_fn=map_fn, reduce_fn=reduce_fn, num_partitions=p, partitioner=partitioner)
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    # two-row Arrow batches: key groups span batch boundaries on both sides
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        out = mr_run(spark, fx.lines_df(spark, lines), job).select(
+            "key",
+            "out",
+            partitioner(F.col("key"), p).alias("bucket"),
+            F.spark_partition_id().alias("pid"),
+        )
+        rows = out.collect()
+        empty = mr_run(spark, fx.lines_df(spark, []), job).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+    assert map_calls.value == len(lines)
+    assert reduce_calls.value == len(keys)
+    counts = Counter(lines)
+    bucket_of = {r.key: r.bucket for r in rows}
+    want = [
+        (k, out)
+        for k in sorted(counts, key=lambda k: (bucket_of[k], k))
+        for out in (f"n={counts[k]}", "end")
+    ]
+    assert [(r.key, r.out) for r in rows] == want
+    assert all(r.pid == r.bucket for r in rows)
+    if partitioner is range_partitioner:
+        bits = p.bit_length() - 1  # MR_SortedPartition: floor(log2 p) top bits
+        assert bucket_of == {k: int(k) >> (32 - bits) if bits else 0 for k in keys}
+    assert empty == []
 
 
 # --- partition invariance (replaces thread-count checks, SURVEY.md §5) ------

@@ -174,6 +174,20 @@ def test_declarative_queries_avoid_python_udfs(spark):
         assert "EvalPython" not in plan, f"{name} fell back to Python UDF"
 
 
+@pytest.mark.parametrize("name, p", [("mr_facade_wordcount", 8), ("mr_facade_sort", 4)])
+def test_mr_facade_is_one_partition_id_exchange(spark, name, p):
+    # the facade places each pair by its bucket and scans partitions in
+    # key order: one exchange, one sort, no range sampling (which would
+    # re-run the Python stages)
+    plan = plan_of(QUERIES[name](spark, SF))
+    exchanges = [line for line in plan.splitlines() if "Exchange " in line]
+    assert len(exchanges) == 1, plan
+    assert "Exchange shufflepartitionidpassthrough(" in exchanges[0], plan
+    assert f"), {p}), REPARTITION_BY_NUM" in exchanges[0], plan
+    assert "rangepartitioning" not in plan, plan
+    assert plan.count("Sort [") == 1, plan
+
+
 def test_doc_chunks_is_map_side_single_tokenize(spark):
     # chunking must tokenize once (the regexp split evaluated per doc,
     # not re-expanded per chunk) and stay shuffle-free up to the output
