@@ -44,6 +44,7 @@ def label_propagation(pairs: DataFrame, rounds: int = 3) -> DataFrame:
     synchronous majority-update rounds from labels = own id; ties in
     the majority vote break to the smallest label, so the result is a
     pure deterministic function of the edge set."""
+    # cut: pin measured 4.50 -> 5.21 s at sf0.1 (dedup_label_propagation, 0/5 pin wins)
     edges = pairs.select(
         F.col("id1").cast("long").alias("a"), F.col("id2").cast("long").alias("b")
     ).localCheckpoint(eager=True)  # pin: reused every round

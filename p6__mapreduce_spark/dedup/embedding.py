@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 from p6__mapreduce_spark.functions.vectors import dot_product, l2_norm
 
@@ -86,7 +86,7 @@ def cosine_neardup_pairs_lsh(
     # re-attach sides); unpinned, the bucket projection re-ran per
     # consumer (plan audit r10: 4 embeddings scans). One corpus pass
     # materializes it — the guide-§8 "fingerprint once" discipline.
-    bucketed = pin_corpus(
+    bucketed = pin(
         embeddings.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).cast("array<double>").alias("v"),

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.pin import pin
+
 
 
 def shingle_postings(
@@ -89,14 +91,9 @@ def ngram_jaccard_pairs(
     # string: ~4x smaller shuffle keys, same intersection counts up to a
     # 2^-64 collision bound (would need two distinct shingles of one
     # pair to collide; probability ~n_shingles^2/2^64 ≈ 1e-10 here).
-    # postings feed 3 plan branches (two self-join sides + sizes):
-    # cache halves the end-to-end time at test scale. At 100 TB swap the
-    # cache for a checkpointed/written intermediate — same plan shape.
+    # postings feed 3 plan branches (two self-join sides + sizes)
     if postings is None:
-        # eager cache: three branches (two join sides + sizes) of one
-        # action would otherwise race and recompute the posting plan
-        postings = shingle_postings(docs, k).cache()
-        postings.count()
+        postings = pin(shingle_postings(docs, k))
     postings = postings.select("doc_id", F.xxhash64("shingle").alias("shingle"))
 
     if candidates is not None and {"n1", "n2"} <= set(candidates.columns):
@@ -216,8 +213,7 @@ def prefix_filter_pairs(
     aggregation."""
     from pyspark.sql import Window
 
-    postings = shingle_postings(docs, k).cache()
-    postings.count()
+    postings = pin(shingle_postings(docs, k))
     doc_freq = postings.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     sizes = postings.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("doc_id").orderBy("df", "shingle")
@@ -271,8 +267,7 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.8, k: int = 3) -> Da
     undirected intersection count, so the directed output costs no
     second join. Exact integer counts; one final division per row.
     """
-    postings = shingle_postings(docs, k).cache()
-    postings.count()
+    postings = pin(shingle_postings(docs, k))
     hashed = postings.select("doc_id", F.xxhash64("shingle").alias("shingle"))
     a = hashed.alias("a")
     b = hashed.alias("b")

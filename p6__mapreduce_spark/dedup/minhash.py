@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from p6__mapreduce_spark.dedup.jaccard import ngram_jaccard_pairs, shingle_postings
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 from p6__mapreduce_spark.functions.hashing import POLY_MOD, poly_hash_expr
 
 # fixed affine-permutation parameters (deterministic; coprime with POLY_MOD)
@@ -134,16 +134,10 @@ def minhash_lsh_pairs(
     dedup.jaccard.JACCARD_ORACLE_SQL) up to ~1e-7 miss probability.
     """
     rows_per_band = num_hashes // num_bands
-    # ONE cached posting list feeds the signature computation, both
+    # ONE pinned posting list feeds the signature computation, both
     # sides of the exact-Jaccard verification, and the size counts —
-    # four branches of a single action. Materialize the cache EAGERLY:
-    # lazily-cached branches race and each recomputes the full
-    # posting-list plan (posexplode + window + distinct) before any
-    # partition is cached — measured 2.5x slower end-to-end at sf0.1.
-    # At 100 TB, replace the cache with a written intermediate table;
-    # the plan shape is identical.
-    postings = shingle_postings(docs, k).cache()
-    postings.count()
+    # four branches of a single action.
+    postings = pin(shingle_postings(docs, k))
     sigs = minhash_signatures(docs, k, num_hashes, postings=postings)
     cands = lsh_candidates(sigs, num_bands, rows_per_band)
     return ngram_jaccard_pairs(docs, threshold, k, candidates=cands, postings=postings)
@@ -172,12 +166,7 @@ def incremental_neardup_pairs(
         # Jaccard verify join; unpinned, the shingle explode re-ran per
         # consumer (plan audit r10: 4 documents scans). One pass per
         # side is the floor — corpus and batch are different inputs.
-        # Failure semantics (r11): posting lists are CORPUS-SIZED
-        # (~k× token bytes) → persist, not localCheckpoint — the same
-        # recomputable-lineage shape minhash_lsh_pairs has always used
-        # for its cached postings; a lost executor re-derives from the
-        # documents scan instead of failing the job.
-        postings = pin_corpus(shingle_postings(df, k))
+        postings = pin(shingle_postings(df, k))
         sigs = minhash_signatures(df, k, num_hashes, postings=postings)
         bands = F.array(
             *[

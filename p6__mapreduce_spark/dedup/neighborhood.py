@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 from p6__mapreduce_spark.functions.text import tokens_expr
 
@@ -60,7 +60,7 @@ def sorted_neighborhood_pairs(
     w = Window.partitionBy("block").orderBy("sort_key", "doc_id")
     # both join sides consume the ranked table: materialize it once
     # instead of re-tokenizing + re-sorting the corpus per side
-    ranked = pin_corpus(keyed.withColumn("rn", F.row_number().over(w)))
+    ranked = pin(keyed.withColumn("rn", F.row_number().over(w)))
     # window pairing as a pure COMPOSITE-KEY equi-join: the anchor
     # side explodes the w-1 rank offsets and joins on (block, rn+off).
     # An equi-join on block alone with a rank-range predicate

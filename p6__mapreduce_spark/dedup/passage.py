@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 from p6__mapreduce_spark.functions.text import tokens_expr
 from p6__mapreduce_spark.operators.text_analysis import TOKENS_ORACLE
 
@@ -51,10 +51,7 @@ def passage_dedup_rewrite(docs: DataFrame, passage_tokens: int = 10) -> DataFram
     # consumer (plan audit r10: 3 documents scans; now ONE — the
     # substring.py tokenize-once discipline; pinning segs instead
     # would materialize ~corpus-text bytes a second time).
-    # Failure semantics (r11): corpus-sized token arrays → persist,
-    # not localCheckpoint — recomputable lineage on executor loss,
-    # disk spill instead of corpus-scale local checkpoint storage.
-    toks = pin_corpus(toks.withColumn("n_passages", F.floor(n_seg).cast("long")))
+    toks = pin(toks.withColumn("n_passages", F.floor(n_seg).cast("long")))
     segs = toks.select(
         "doc_id",
         "n_passages",

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 from p6__mapreduce_spark.functions.vectors import dot_product, l2_norm
 from p6__mapreduce_spark.similarity.ivf import (
@@ -67,7 +67,7 @@ def semantic_dedup(
     # assigned feeds both pair sides AND the final keep join; pinned so
     # the corpus argmin projection runs once (plan audit r10: 3
     # embeddings scans unpinned — the guide-§8 "fingerprint once" shape)
-    assigned = pin_corpus(ivf_assign(embeddings, cents, vec_col=vec_col))
+    assigned = pin(ivf_assign(embeddings, cents, vec_col=vec_col))
     a = assigned.select(
         F.col(id_col).alias("id1"),
         "list_id",
@@ -160,7 +160,7 @@ def cluster_medoids(
         embeddings, n_centroids=n_centroids, vec_col=vec_col
     )
     # same 3-consumer pin as semantic_dedup (pair sides + member join)
-    assigned = pin_corpus(ivf_assign(embeddings, cents, vec_col=vec_col))
+    assigned = pin(ivf_assign(embeddings, cents, vec_col=vec_col))
     a = assigned.select(
         F.col(id_col).alias("id1"),
         "list_id",

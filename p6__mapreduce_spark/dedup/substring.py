@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 from p6__mapreduce_spark.functions.text import tokens_expr
 
 # \x01 cannot appear in [a-z0-9]+ tokens, so joined shingles are
@@ -79,13 +79,7 @@ def dup_ngram_coverage(docs: DataFrame, k: int = 8) -> DataFrame:
     # shingle expansion still evaluates per occ consumer, but over the
     # pinned rows (CPU re-eval, no re-scan/re-tokenize); pinning occ
     # instead would materialize a ~k-times-corpus relation — rejected.
-    # Failure semantics (r11): the token table is CORPUS-SIZED (array
-    # bytes ≈ input text bytes), so it is pinned with persist, not
-    # localCheckpoint — a lost executor re-derives its partitions from
-    # the documents scan instead of failing the job, and oversized
-    # partitions spill to disk rather than requiring corpus-scale
-    # executor-local checkpoint storage.
-    toks = pin_corpus(docs.select("doc_id", tokens_expr(F.col("text")).alias("w")))
+    toks = pin(docs.select("doc_id", tokens_expr(F.col("text")).alias("w")))
     occ = toks.select(
         "doc_id",
         F.posexplode(_shingles(F.col("w"), k)).alias("start", "shingle"),

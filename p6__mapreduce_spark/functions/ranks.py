@@ -97,7 +97,7 @@ def two_phase_rank(
         df.repartitionByRange(n, *group_cols, *order_cols)
         .sortWithinPartitions(*group_cols, *order_cols)
         .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # cut: freezes _PID for both passes
     )
     counts = keyed.groupBy(_PID, *group_cols).agg(F.count(F.lit(1)).alias(_CNT))
     w_off = (

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 
 def _cents(col) -> F.Column:
@@ -303,7 +303,7 @@ def skew_profile(df: DataFrame, key_col: str) -> DataFrame:
     # |keys|-bounded; feeds the scalar (n, total) aggregate AND the
     # ranked window — unpinned, the corpus groupBy re-ran per consumer
     # (plan audit r10: 2 scans; now ONE corpus pass)
-    counts = pin_corpus(
+    counts = pin(
         df.groupBy(F.col(key_col).alias("k")).agg(F.count(F.lit(1)).alias("cnt"))
     )
     # scalar (n, total) rides in on a broadcast instead of two extra
@@ -440,21 +440,19 @@ def mad_outliers(
     w_v = Window.partitionBy("g").orderBy(F.col("v").asc())
     w_g = Window.partitionBy("g")
     vals = df.select(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
-    med = (
+    med = pin(
         vals.withColumn("rn", F.row_number().over(w_v))
         .withColumn("n", F.count(F.lit(1)).over(w_g))
         .filter(F.col("rn") == F.ceil(F.col("n") / 2))
         .select("g", F.col("v").alias("med"))
-        .localCheckpoint(eager=True)
     )
     dev = vals.join(F.broadcast(med), "g").withColumn("dev", F.abs(F.col("v") - F.col("med")))
     w_d = Window.partitionBy("g").orderBy(F.col("dev").asc())
-    mad = (
+    mad = pin(
         dev.withColumn("rn", F.row_number().over(w_d))
         .withColumn("n", F.count(F.lit(1)).over(w_g))
         .filter(F.col("rn") == F.ceil(F.col("n") / 2))
         .select("g", F.col("dev").alias("mad"))
-        .localCheckpoint(eager=True)
     )
     return (
         dev.join(F.broadcast(mad), "g")

@@ -87,7 +87,7 @@ def _train(
     cost MORE than the saved checkpoint job, so the per-round eager
     checkpoint stays (it is also what bounds plan depth at any
     num_merges)."""
-    vocab = word_vocab(docs).localCheckpoint(eager=True)
+    vocab = word_vocab(docs).localCheckpoint(eager=True)  # cut: loop-carried merge state
     merges: list[tuple[int, str, str, int]] = []
     for i in range(num_merges):
         # sequence(1, 0) would be DESCENDING in Spark, so single-symbol
@@ -119,7 +119,7 @@ def _train(
         merges.append((i, lhs, rhs, c))
         vocab = vocab.select(
             "word", "n", _merge_fold("syms", lhs, rhs).alias("syms")
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)  # cut: rebuilt every merge round
     return merges, vocab
 
 

@@ -281,6 +281,7 @@ def isotonic_calibration(events: DataFrame, *, max_bin: int = 12) -> DataFrame:
         ).alias("b"),
         F.max((F.col("event_type") == "purchase").cast("long")).alias("y"),
     )
+    # cut: pin measured 0.55 -> 0.68 s at sf0.1 (isotonic_calibration, 0/5 pin wins)
     bins = (
         per_ud.groupBy("b")
         .agg(F.count(F.lit(1)).cast("long").alias("n"), F.sum("y").cast("long").alias("s"))
@@ -412,6 +413,7 @@ def logrank_test_conversion(events: DataFrame) -> DataFrame:
     # query). Pin it once: ONE corpus pass builds the |users|-bounded
     # frame (the KM table every survival pipeline materializes), and
     # everything after runs over it.
+    # cut: pin measured 0.97 -> 1.26 s at sf0.1 (logrank_test_conversion, 0/5 pin wins)
     dur0 = per_user.filter(F.col("first_view").isNotNull()).select(
         F.when(
             converted,
@@ -441,6 +443,7 @@ def logrank_test_conversion(events: DataFrame) -> DataFrame:
     )
     # |days| x 2 bounded; feeds the grid's three branches + risk_g —
     # pin so the user-bounded aggregation above it runs once
+    # cut: pin measured 0.97 -> 1.26 s at sf0.1 (logrank_test_conversion, 0/5 pin wins)
     steps = durations.groupBy("t_days", "g").agg(
         F.sum("converted").cast("long").alias("d"),
         F.count(F.lit(1)).cast("long").alias("leaving"),

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.pin import pin
 from p6__mapreduce_spark.functions.text import tokens_expr
 
 
@@ -61,11 +62,10 @@ def skipgram_pmi(
     # vocab-bounded; feeds both PMI join legs AND the total — unpinned,
     # the corpus tokenize+explode re-ran per consumer (plan audit r10:
     # 4 documents scans; now 2 — the pair pass and the unigram pass)
-    uni = (
+    uni = pin(
         tok_df.select(F.explode(w).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     total = uni.agg(F.sum("c").alias("n_tokens"))
     lift = F.floor(

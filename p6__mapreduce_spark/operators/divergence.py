@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.pin import pin
 from p6__mapreduce_spark.functions.text import tokens_expr
 
 _LN2_Q6 = 693147  # floor(ln(2)*1e6 + 0.5)
@@ -51,7 +52,7 @@ def jsd_source_unigrams(docs: DataFrame) -> DataFrame:
     COALESCE jsd to ln 2 where n_shared_tokens is NULL); and (c) it
     keeps the corpus-scale plan outer-join-free. The oracle encodes
     the same inner-join semantics, so both engines agree row-for-row."""
-    tokc = (
+    tokc = pin(
         docs.select("source", F.explode(tokens_expr("text")).alias("token"))
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -59,7 +60,6 @@ def jsd_source_unigrams(docs: DataFrame) -> DataFrame:
         # materialize the vocab-sized count table once instead of
         # re-tokenizing the corpus per consumer (pq/kmeans discipline;
         # a written intermediate at cluster scale)
-        .localCheckpoint(eager=True)
     )
     tot = tokc.groupBy("source").agg(F.sum("c").cast("long").alias("t"))
 

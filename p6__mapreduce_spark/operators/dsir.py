@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 from p6__mapreduce_spark.functions.hashing import poly_hash_expr
 from p6__mapreduce_spark.functions.text import tokens_expr
@@ -47,7 +47,7 @@ def _gram_instances(docs: DataFrame, num_buckets: int) -> DataFrame:
 
     One scan, one explode (r11): the retired UNION of a unigram branch
     and a bigram branch read the corpus twice — visible as two parquet
-    scans inside the pinned subtree once pin_corpus made the
+    scans inside the pinned subtree once pin made the
     materialization pass part of the plan. ``concat`` of the token
     array with the bigram array feeds a single explode; the instance
     MULTISET is identical (per doc: all unigrams then all bigrams),
@@ -94,7 +94,7 @@ def dsir_weights(
     # At 100 TB this is the standard written intermediate: the counts
     # relation is |docs| x <= num_buckets rows, far smaller than the
     # gram instances it collapses.
-    per_doc_bucket = pin_corpus(
+    per_doc_bucket = pin(
         grams.groupBy("doc_id", "lang", "bucket").agg(F.count(F.lit(1)).alias("c"))
     )
     bucket_counts = per_doc_bucket.groupBy("bucket").agg(

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.pin import pin
+
 
 def ks_statistic(
     df: DataFrame, value: Column, in_group1: Column, in_group2: Column
@@ -50,9 +52,11 @@ def ks_statistic(
     # |distinct values|-bounded; feeds the totals broadcast AND the
     # cumulative window — unpinned, the corpus aggregation re-ran per
     # consumer (plan audit r10; now ONE corpus pass)
-    per_v = tagged.groupBy("v").agg(
-        F.sum("g1").cast("long").alias("c1"), F.sum("g2").cast("long").alias("c2")
-    ).localCheckpoint(eager=True)
+    per_v = pin(
+        tagged.groupBy("v").agg(
+            F.sum("g1").cast("long").alias("c1"), F.sum("g2").cast("long").alias("c2")
+        )
+    )
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     totals = per_v.agg(
         F.sum("c1").cast("long").alias("n1"), F.sum("c2").cast("long").alias("n2")
@@ -204,6 +208,7 @@ def wasserstein1(
     # |distinct values|-bounded; feeds the totals broadcast AND the
     # cumulative window — unpinned, the corpus aggregation re-ran per
     # consumer (plan audit r10; now ONE corpus pass)
+    # cut: pin measured 0.49 -> 0.55 s at sf0.1 (wasserstein_purchase_vs_click, 0/5 pin wins)
     per_v = tagged.groupBy("v").agg(
         F.sum("g1").cast("long").alias("c1"), F.sum("g2").cast("long").alias("c2")
     ).localCheckpoint(eager=True)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from p6__mapreduce_spark.functions.hashing import poly_hash_expr
+from p6__mapreduce_spark.functions.pin import pin
 from p6__mapreduce_spark.functions.text import tokens_expr
 
 
@@ -113,6 +114,7 @@ def ngram_pmi(docs: DataFrame, *, min_count: int = 5, top_k: int = 50) -> DataFr
     # vocab-bounded; feeds both PMI join legs AND the total — same
     # 3-consumer pin as skipgram_pmi (plan audit r10: 4 documents
     # scans unpinned; now 2 — pair pass + unigram pass)
+    # cut: pin measured 1.14 -> 1.24 s at sf0.1 (ngram_pmi, 1/5 pin wins)
     uni = (
         tok_df.select(F.explode(w).alias("token"))
         .groupBy("token")
@@ -196,9 +198,11 @@ def target_encode_loo(orders: DataFrame, customer: DataFrame) -> DataFrame:
     # for the model (plan audit r10: 3 orders + 3 customer scans
     # unpinned; now 2 passes — encoder build + encode). The global
     # fallback folds out of the segment sums exactly (integer sums).
-    seg = base.groupBy("c_mktsegment").agg(
-        F.sum("cents").alias("seg_sum"), F.count(F.lit(1)).cast("long").alias("seg_n")
-    ).localCheckpoint(eager=True)
+    seg = pin(
+        base.groupBy("c_mktsegment").agg(
+            F.sum("cents").alias("seg_sum"), F.count(F.lit(1)).cast("long").alias("seg_n")
+        )
+    )
     glob = seg.agg(
         F.sum("seg_sum").alias("g_sum"), F.sum("seg_n").cast("long").alias("g_n")
     )

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from p6__mapreduce_spark.functions.frames import local_frame
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 SCALE = 1_000_000_000_000  # rank fixed-point scale (1e12)
 
@@ -393,7 +393,7 @@ def part_link_prediction(lineitem: DataFrame, *, min_common: int = 2, k: int = 1
     # audit r10: 5 lineitem scans re-running the distinct shuffle per
     # branch). Pin the basket relation once: one corpus pass, then all
     # downstream work is bounded by the (order, part) incidence table.
-    op = pin_corpus(lineitem.select("l_orderkey", "l_partkey").distinct())
+    op = pin(lineitem.select("l_orderkey", "l_partkey").distinct())
     osize = op.groupBy("l_orderkey").agg(F.count(F.lit(1)).cast("long").alias("sz"))
     deg = op.groupBy("l_partkey").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     a = op.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p1"))

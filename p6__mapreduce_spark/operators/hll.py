@@ -207,13 +207,13 @@ def weekly_users_sketch_rollup(events: DataFrame) -> DataFrame:
     # events — and the exact branch already pays that distinct
     # shuffle, so sharing it costs the sketch path nothing it wasn't
     # indirectly paying in the same query. Corpus-proportional rows →
-    # pin_corpus (persist; recomputable lineage). Note this is a
+    # pin (persist; recomputable lineage). Note this is a
     # property of THIS query (sketch + exact contrast together); a
     # sketch-only rollup should keep the raw map-side register
     # projection, which never shuffles (day, user).
-    from p6__mapreduce_spark.functions.pin import pin_corpus
+    from p6__mapreduce_spark.functions.pin import pin
 
-    du = pin_corpus(
+    du = pin(
         events.select(F.to_date("ts").alias("day"), "user_id").distinct()
     )
     w = _mix32(F.col("user_id"))

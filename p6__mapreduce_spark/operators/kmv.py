@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 from p6__mapreduce_spark.operators.hll import _mix32
 
@@ -54,10 +54,11 @@ def kmv_audience_overlap(events: DataFrame) -> DataFrame:
     # (plan audit r10: 8 events scans). Pin the distinct (type, hash)
     # relation (ONE corpus pass — the dedup'd audience table a cohort
     # pipeline materializes) and the K x |groups|-bounded sketch.
-    pairs = pin_corpus(
+    pairs = pin(
         events.select("event_type", _mix32(F.col("user_id")).alias("h")).distinct()
     )
     w = Window.partitionBy("event_type").orderBy("h")
+    # cut: pin measured 0.59 -> 0.81 s at sf0.1 (kmv_audience_overlap, 0/5 pin wins)
     sk = (
         pairs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= K)

@@ -193,15 +193,8 @@ def logreg_quality_irls(events: DataFrame) -> DataFrame:
     brier_q6) after ROUNDS Newton steps from beta = 0."""
     from pyspark.sql import functions as F
 
-    # ROUNDS + 1 passes fan out of this per-(user, day) relation.
-    # Corpus-proportional, but deliberately KEPT on localCheckpoint
-    # (r11 pin audit): switching to pin_corpus/persist was measured
-    # 27% slower (1.72 -> 2.20 s interleaved A/B at sf0.1) because
-    # every Newton round's plan re-embeds the full lineage and the
-    # per-round analysis/cache-scan overhead compounds — the iterative
-    # trainer profile (same adjudication as the ANN quant/res pins).
-    # At cluster scale this becomes a reliable checkpoint() to the
-    # cluster FS, which keeps both truncation and a recompute path.
+    # cut: every Newton round re-reads it; pin measured 27% slower
+    # (1.72 -> 2.20 s at sf0.1) as each round's plan re-embeds the lineage
     feat = (
         events.groupBy("user_id", F.to_date("ts").alias("d"))
         .agg(*[F.expr(e).alias(a) for a, e in FEAT_EXPRS])

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 from p6__mapreduce_spark.functions.text import tokens_expr
 
@@ -56,7 +56,7 @@ def nbayes_source_confusion(docs: DataFrame) -> DataFrame:
     # pruned subtrees — un-pinned, the corpus tokenize + explode ran
     # four times. One eager checkpoint = one corpus pass (the dsir
     # discipline; see OPTIMIZATION_r10.md).
-    tok = pin_corpus(
+    tok = pin(
         docs.select("doc_id", "source", F.explode(tokens_expr("text")).alias("token"))
     )
     cts = tok.groupBy("token", "source").agg(F.count(F.lit(1)).alias("c_ts"))

@@ -79,6 +79,7 @@ def k_anon_generalization(customer: DataFrame, *, k: int = K_ANON) -> DataFrame:
     Output: one row per width — (width, n_classes, min_class_size,
     rows_at_risk (in classes smaller than k), risk_ratio, meets_k,
     is_chosen (the finest width meeting k; all-false if none does))."""
+    # cut: pin measured 0.86 -> 1.29 s at sf0.1 (k_anon_generalization, 0/5 pin wins)
     fine = (
         customer.groupBy(
             "c_nationkey",

@@ -461,7 +461,7 @@ def stable_dense_ids(
         .repartitionByRange(n, "_sha", id_col)
         .sortWithinPartitions("_sha", id_col)
         .select(F.col(id_col), "_sha", F.spark_partition_id().alias("_pid"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # cut: freezes _pid for both jobs
     )
     counts = {
         r["_pid"]: r["cnt"]

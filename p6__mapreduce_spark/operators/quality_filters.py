@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 from p6__mapreduce_spark.functions.text import tokens_expr
 
 # Gopher appendix A1.1 "stop words": a document must contain at least
@@ -143,10 +143,7 @@ def gopher_top_ngram_frac(docs: DataFrame, ns: tuple[int, ...] = (2, 3, 4)) -> D
     # plan audit r10: 4 documents scans); the pinned (doc_id, w) token
     # table is the written intermediate every multi-width n-gram
     # pipeline materializes at 100 TB.
-    # Failure semantics (r11): corpus-sized token arrays → persist,
-    # not localCheckpoint — recomputable lineage on executor loss,
-    # disk spill instead of corpus-scale local checkpoint storage.
-    toks = pin_corpus(docs.select("doc_id", tokens_expr("text").alias("w")))
+    toks = pin(docs.select("doc_id", tokens_expr("text").alias("w")))
     parts = []
     for n in ns:
         occ = shingle_postings(docs, n, distinct=False, toks=toks)

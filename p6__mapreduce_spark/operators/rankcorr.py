@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 
 def _midrank2(per_key: DataFrame, col: str, out: str) -> DataFrame:
@@ -56,7 +56,7 @@ def spearman_user_activity_value(events: DataFrame) -> DataFrame:
     # |users|-bounded; feeds both midrank tables AND the ranked join —
     # unpinned, the corpus aggregation re-ran per consumer (plan audit
     # r10: 3 events scans; now 1)
-    per_user = pin_corpus(
+    per_user = pin(
         events.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("x"),
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"),

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 from p6__mapreduce_spark.functions.text import tokens_expr
 from p6__mapreduce_spark.operators.text_analysis import TOKENS_ORACLE
 
@@ -50,7 +50,7 @@ def tfidf_doc_terms(docs: DataFrame) -> DataFrame:
     # tf feeds the df rollup AND the final join — pinned so the corpus
     # tokenize+explode runs once (plan audit r10: 3 documents scans
     # unpinned; the char_bigram_entropy / tfidf_cosine_topk discipline)
-    tf = pin_corpus(
+    tf = pin(
         docs.select("doc_id", F.explode(tokens_expr("text")).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -122,14 +122,10 @@ def bm25_scores(
             for i, term in enumerate(query_terms)
         ],
     )
-    toks = pin_corpus(toks)
-    # ^ narrow numeric relation (dl + per-term tf ints), but one row
-    # PER DOCUMENT — corpus-proportional, so it is pinned with persist
-    # (recomputable lineage, disk spill) rather than localCheckpoint
-    # (r11 failure-semantics pass). It feeds the corpus-stats
-    # aggregate AND the scoring pass — unpinned, the tokenize +
-    # per-term array counts re-ran per consumer (plan audit r10: 2
-    # documents scans; now ONE)
+    toks = pin(toks)
+    # ^ feeds the corpus-stats aggregate AND the scoring pass —
+    # unpinned, the tokenize + per-term array counts re-ran per
+    # consumer (plan audit r10: 2 documents scans; now ONE)
     stats = toks.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("dl").alias("sum_dl"),
@@ -175,6 +171,8 @@ def unigram_surprise(docs: DataFrame) -> DataFrame:
     # vocab-bounded; feeds the total AND the scoring join — pinned so
     # the corpus explode runs once for the model (plan audit r10: 3
     # documents scans; now 2 — model pass + per-doc scoring pass)
+    # cut: composed into tools/run_pipeline.py at sf0.001, pin's kept
+    # lineage grew the driver past 15 GB (killed) vs 9.9 GB, 84 s, cut
     freq = (
         tok.groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -235,7 +233,7 @@ def bigram_entropy(docs: DataFrame) -> DataFrame:
     # join — unpinned, the corpus bigram explode re-ran per consumer
     # (plan audit r10: 2 documents scans; now ONE — the
     # char_bigram_entropy pin discipline)
-    cnt = pin_corpus(
+    cnt = pin(
         shingle_postings(docs, 2, distinct=False)
         .groupBy("doc_id", "shingle")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -311,6 +309,7 @@ def bigram_lm(docs: DataFrame, min_pair_count: int = 2) -> DataFrame:
     # unpinned, the corpus bigram explode re-ran per consumer (plan
     # audit r10: 2 documents scans; now ONE — the bigram_perplexity
     # pin, same relation)
+    # cut: pin measured 0.96 -> 1.11 s at sf0.1 (bigram_lm, 1/5 pin wins)
     pairs = (
         shingle_postings(docs, 2, distinct=False)
         .groupBy("shingle")
@@ -426,10 +425,9 @@ def bigram_perplexity(docs: DataFrame, min_pair_count: int = 2) -> DataFrame:
     # the unigram backoff — pinned so the corpus bigram explode runs
     # once for the whole model build (plan audit r10: 5 documents
     # scans unpinned; now 2 — model build + per-doc scoring, the floor)
-    pairs = (
+    pairs = pin(
         big.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c_pair"))
-        .localCheckpoint(eager=True)
     )
     ctx = pairs.groupBy("w1").agg(F.sum("c_pair").alias("c_ctx"))
     lm = (
@@ -580,10 +578,7 @@ def tfidf_cosine_topk(
     # the weight table feeds FOUR consumers (join sides a/b + both
     # norm lookups); without materialization Catalyst re-plans the
     # tokenize+tf+df subtree once per consumer — 4 corpus scans.
-    # Per-(doc, token) rows are corpus-proportional -> persist
-    # (recomputable lineage, the written-intermediate analogue), not
-    # localCheckpoint (r11 failure-semantics pass).
-    w = pin_corpus(w)
+    w = pin(w)
     norms = w.groupBy("doc_id").agg(F.sum(F.col("wq") * F.col("wq")).cast("long").alias("nrm2"))
     a = w.select(F.col("doc_id").alias("doc_a"), "token", F.col("wq").alias("wa"))
     b = w.select(F.col("doc_id").alias("doc_b"), F.col("token").alias("tok_b"), F.col("wq").alias("wb"))

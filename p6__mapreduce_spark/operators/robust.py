@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.pin import pin
+
 
 def _daily_revenue(orders: DataFrame) -> DataFrame:
     """One corpus aggregation → (day_idx, cents): days since epoch and
@@ -55,10 +57,10 @@ def theil_sen_daily_revenue(orders: DataFrame) -> DataFrame:
     The |days|-bounded daily aggregate fans out into THREE consumers
     (both sides of the pair grid + the day-count scalar); per-branch
     column pruning makes the subtrees unequal so ReusedExchange never
-    fires and the orders scan+aggregation ran 3x. One eager
-    localCheckpoint pins it — the written daily-rollup intermediate a
+    fires and the orders scan+aggregation ran 3x. One eager pin
+    shares it — the written daily-rollup intermediate a
     100 TB pipeline would reuse (r10 multi-consumer discipline)."""
-    daily = _daily_revenue(orders).localCheckpoint(eager=True)
+    daily = pin(_daily_revenue(orders))
     a = daily.select(F.col("day_idx").alias("d1"), F.col("cents").alias("c1"))
     b = daily.select(F.col("day_idx").alias("d2"), F.col("cents").alias("c2"))
     slopes = a.join(b, F.col("d1") < F.col("d2")).select(
@@ -116,9 +118,9 @@ def seasonal_anomaly_daily(orders: DataFrame, k_mad: int = 3) -> DataFrame:
     ``daily`` feeds both the per-dow median branch and the deviation
     join (and ``dev`` feeds the MAD branch plus the final join), so
     un-pinned the orders scan+aggregation re-ran per consumer; the
-    eager localCheckpoint bounds it to ONE corpus pass — everything
+    pin bounds it to ONE corpus pass — everything
     downstream is |days|-sized."""
-    daily = _daily_revenue(orders).localCheckpoint(eager=True).withColumn(
+    daily = pin(_daily_revenue(orders)).withColumn(
         # day_idx 0 = Thursday 1970-01-01; (idx+4) % 7 → 0=Sunday..6=Saturday
         "dow",
         (F.col("day_idx") + 4) % 7,
@@ -209,10 +211,9 @@ def cusum_changepoint_daily(orders: DataFrame) -> DataFrame:
     totals so the caller derives means at any precision it wants.
 
     ``daily`` feeds the prefix window AND the (n, total) scalar, so
-    un-pinned the orders aggregation ran twice; the eager
-    localCheckpoint bounds it to one corpus pass (r10 multi-consumer
-    discipline)."""
-    daily = _daily_revenue(orders).localCheckpoint(eager=True)
+    un-pinned the orders aggregation ran twice; the pin bounds it to
+    one corpus pass (r10 multi-consumer discipline)."""
+    daily = pin(_daily_revenue(orders))
     w = Window.orderBy("day_idx").rowsBetween(Window.unboundedPreceding, 0)
     pref = daily.select(
         "day_idx",
@@ -283,9 +284,9 @@ def mann_kendall_trend(orders: DataFrame, z_crit: float = 1.96) -> DataFrame:
 
     ``daily`` fans out into FOUR consumers (both pair-grid sides, the
     tie histogram, the day count), so un-pinned the orders aggregation
-    ran 4x; the eager localCheckpoint bounds it to one corpus pass
+    ran 4x; the pin bounds it to one corpus pass
     (r10 multi-consumer discipline)."""
-    daily = _daily_revenue(orders).localCheckpoint(eager=True)
+    daily = pin(_daily_revenue(orders))
     a = daily.select(F.col("day_idx").alias("d1"), F.col("cents").alias("c1"))
     b = daily.select(F.col("day_idx").alias("d2"), F.col("cents").alias("c2"))
     s_stat = (
@@ -395,6 +396,7 @@ def binseg_changepoints_daily(orders: DataFrame) -> DataFrame:
     cp_day_idx, cp_pos, stat, seg_start_pos, seg_end_pos)."""
     daily = _daily_revenue(orders)
     w = Window.orderBy("day_idx").rowsBetween(Window.unboundedPreceding, 0)
+    # cut: pin measured 0.83 -> 0.94 s at sf0.1 (binseg_changepoints, 0/5 pin wins)
     pref = daily.select(
         "day_idx",
         F.sum("cents").over(w).cast("long").alias("p"),
@@ -644,6 +646,7 @@ def huber_regression_daily(orders: DataFrame) -> DataFrame:
     ``feat`` was even materialized; pinning ``daily`` too makes the
     whole query exactly one corpus pass (r10 multi-consumer
     discipline)."""
+    # cut: pin measured 1.07 -> 1.22 s at sf0.1 (huber_regression_daily, 0/5 pin wins)
     daily = _daily_revenue(orders).localCheckpoint(eager=True)
     scal = daily.agg(
         F.min("day_idx").cast("long").alias("d0"),
@@ -658,7 +661,7 @@ def huber_regression_daily(orders: DataFrame) -> DataFrame:
             "tt",
             "nn",
         )
-        .localCheckpoint(eager=True)  # ROUNDS + 1 passes fan out
+        .localCheckpoint(eager=True)  # cut: every Huber round re-reads it
     )
     q = (0, 0)
     for _ in range(HUBER_ROUNDS):

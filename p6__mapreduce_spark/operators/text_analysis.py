@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 from p6__mapreduce_spark.functions.frames import local_frame
 from p6__mapreduce_spark.functions.hashing import POLY_BASE, POLY_MOD, poly_hash_expr
@@ -308,7 +308,7 @@ def rare_ngram_ratio(docs: DataFrame, n: int = 2, rare_max: int = 2) -> DataFram
 
     Plan: ONE n-gram explode (the arrays_zip shape from
     dedup.jaccard.shingle_postings — tokenizer runs once per row),
-    eagerly cached because it feeds BOTH the corpus count and the probe
+    pinned because it feeds BOTH the corpus count and the probe
     side of the join (without the materialization each branch would
     recompute the explode; with it the op is ~2x faster at sf0.1).
     Docs with fewer than n tokens have no n-grams and are omitted. At
@@ -320,8 +320,7 @@ def rare_ngram_ratio(docs: DataFrame, n: int = 2, rare_max: int = 2) -> DataFram
     grams = shingle_postings(docs, n, distinct=False).withColumnRenamed(
         "shingle", "ngram"
     )
-    grams = grams.cache()
-    grams.count()  # eager: fill the cache BEFORE the two consumers race
+    grams = pin(grams)
     corpus = grams.groupBy("ngram").agg(F.count(F.lit(1)).alias("corpus_cnt"))
     return (
         grams.join(corpus, "ngram")
@@ -469,7 +468,7 @@ def quantile_normalize_tokens(docs: DataFrame) -> DataFrame:
     # the pooled total AND the value histogram — unpinned, the corpus
     # tokenize re-ran per consumer (plan audit r10: 2 documents scans;
     # now ONE)
-    nz = pin_corpus(
+    nz = pin(
         docs.select(
             "doc_id", "source", F.size(tokens_expr("text")).cast("long").alias("n_tokens")
         ).filter(F.col("n_tokens") > 0)
@@ -564,7 +563,7 @@ def vocab_growth_curve(docs: DataFrame, *, n_checkpoints: int = 20) -> DataFrame
     per_doc_tokens = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tok")
     )
-    doc_ck = pin_corpus(  # feeds both the type and token rollups
+    doc_ck = pin(  # feeds both the type and token rollups
         doc_rank.crossJoin(F.broadcast(n_docs))  # 1-row scalar broadcast (labeled)
         .select("doc_id", "rk", ck)
     )

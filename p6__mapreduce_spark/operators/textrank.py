@@ -80,6 +80,7 @@ def textrank_keywords(
     from pyspark.sql import Window
 
     edges = cooccurrence_edges(docs, text_col=text_col)
+    # cut: pin measured 0.75 -> 0.84 s at sf0.1 (textrank_keywords, 0/5 pin wins)
     adj = edges.withColumn(
         "out_w", F.sum("w").over(Window.partitionBy("src"))
     ).localCheckpoint(eager=True)

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 
 def gap_fill_daily(
@@ -54,8 +54,7 @@ def gap_fill_daily(
     # feeds the span grid AND the fill join — unpinned, the corpus
     # last-per-day window re-ran per consumer (plan audit r10: 2
     # events scans; now ONE — the upsert_latest_snapshot discipline).
-    # persist, not localCheckpoint: recomputable lineage (r11).
-    daily = pin_corpus(daily)
+    daily = pin(daily)
     grid = (
         daily.groupBy("k")
         .agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
@@ -145,6 +144,7 @@ def ols_daily_trend(orders: DataFrame) -> DataFrame:
     the orders aggregation ran twice; the eager localCheckpoint bounds
     it to one corpus pass (r10 multi-consumer discipline).
     """
+    # cut: pin measured 0.49 -> 0.55 s at sf0.1 (ols_daily_trend, 0/5 pin wins)
     daily = _daily_kilodollars(orders).localCheckpoint(eager=True)
     x0 = daily.agg(F.min("day_idx").alias("x0"))
     sums = (
@@ -225,11 +225,10 @@ def acf_daily_revenue(orders: DataFrame, *, max_lag: int = 7) -> DataFrame:
     Lag-partition cardinality = max_lag rows total.
 
     ``daily`` feeds the lag explode AND the equi-join probe side, so
-    un-pinned the orders aggregation ran twice; the eager
-    localCheckpoint bounds it to one corpus pass (r10 multi-consumer
-    discipline).
+    un-pinned the orders aggregation ran twice; the pin bounds it to
+    one corpus pass (r10 multi-consumer discipline).
     """
-    daily = _daily_kilodollars(orders).localCheckpoint(eager=True)
+    daily = pin(_daily_kilodollars(orders))
     lagged = daily.select(
         "day_idx",
         F.col("y").alias("y1"),
@@ -309,14 +308,13 @@ def durbin_watson_daily(orders: DataFrame) -> DataFrame:
     materialized; pinning ``daily`` too makes the whole query exactly
     one corpus pass (r10 multi-consumer discipline).
     """
-    daily = _daily_kilodollars(orders).localCheckpoint(eager=True)
+    daily = pin(_daily_kilodollars(orders))
     x0 = daily.agg(F.min("day_idx").alias("x0"))
     # |days| rows feed both the normal-equation aggregate and the
     # residual pass: materialize once, never rescan the orders corpus
-    centered = (
+    centered = pin(
         daily.crossJoin(F.broadcast(x0))
         .select((F.col("day_idx") - F.col("x0")).alias("x"), "y")
-        .localCheckpoint(eager=True)
     )
     sums = centered.agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from p6__mapreduce_spark.operators.core import distinct_sorted, line_count, range_bucket_sort
 from p6__mapreduce_spark.operators.mapreduce import mr_run, sort_job, wordcount_job
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 from p6__mapreduce_spark.sources.readers import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -26,25 +26,26 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE_SQL: dict[str, str] = {}
 
-# The MinHash-LSH pair edges and the connected components derived from
-# them are the most expensive shared prefix in the registry — consumed
-# by dedup_minhash_lsh, dedup_components, canonical_best_quality and
-# clean_corpus. Memoize the *materialized* DataFrames per (session,
-# sf_dir, threshold): both are localCheckpoint-backed, so reuse costs a
-# partition scan, not a recompute. This is the in-process analogue of
-# the written-intermediate pattern a 100 TB pipeline would use (compute
-# the edge set once, persist it, fan curation policies out from it).
-_MEMO: dict[tuple[str, str, float], tuple[SparkSession, DataFrame]] = {}
+# Memoized per (session, key): the MinHash-LSH pair edges and the
+# connected components derived from them (the most expensive shared
+# prefix in the registry — consumed by dedup_minhash_lsh,
+# dedup_components, canonical_best_quality and clean_corpus), and the
+# IVF/SemDeDup coarse centroids (knn_ivf and semantic_dedup train the
+# identical model). The in-process analogue of the written intermediate
+# a 100 TB pipeline would fan curation policies out from.
+_MEMO: dict[tuple, tuple[SparkSession, object]] = {}
 
 
-def _memo(kind: str, spark: SparkSession, sf_dir: str, threshold: float, build) -> DataFrame:
-    key = (kind, sf_dir, threshold)
+def _memo(key: tuple, spark: SparkSession, build):
     hit = _MEMO.get(key)
     if hit is not None and hit[0] is spark:  # session guard: drop stopped-session entries
         return hit[1]
-    df = build().localCheckpoint(eager=True)
-    _MEMO[key] = (spark, df)
-    return df
+    value = build()
+    if isinstance(value, DataFrame):
+        # cut, not pin: the value must outlive the harnesses' per-query clearCache
+        value = value.localCheckpoint(eager=True)
+    _MEMO[key] = (spark, value)
+    return value
 
 
 def _lsh_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> DataFrame:
@@ -54,10 +55,8 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> Data
     from p6__mapreduce_spark.dedup.minhash import minhash_lsh_pairs
 
     return _memo(
-        "pairs",
+        ("pairs", sf_dir, threshold),
         spark,
-        sf_dir,
-        threshold,
         lambda: minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), threshold=threshold),
     )
 
@@ -67,32 +66,24 @@ def _lsh_components(spark: SparkSession, sf_dir: str, threshold: float = 0.8) ->
     from p6__mapreduce_spark.dedup.components import dedup_components
 
     return _memo(
-        "components",
+        ("components", sf_dir, threshold),
         spark,
-        sf_dir,
-        threshold,
         lambda: dedup_components(
             load_table(spark, sf_dir, "documents"), _lsh_pairs(spark, sf_dir, threshold)
         ),
     )
 
 
-_CENTROIDS: dict[tuple[str, str, int], tuple[SparkSession, list[list[float]]]] = {}
-
-
 def _trained_centroids(spark: SparkSession, sf_dir: str, n_centroids: int = 16) -> list[list[float]]:
-    """Memoized IVF/SemDeDup coarse centroids per (session, sf_dir, k):
-    knn_ivf and semantic_dedup train the identical model (same sample,
-    same seed), so the sample job and k-means run once per process."""
-    key = ("centroids", sf_dir, n_centroids)
-    hit = _CENTROIDS.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    """Memoized IVF/SemDeDup coarse centroids: the sample job and
+    k-means run once per (session, sf_dir, k)."""
     from p6__mapreduce_spark.similarity.ivf import train_centroids
 
-    cents = train_centroids(load_table(spark, sf_dir, "embeddings"), n_centroids)
-    _CENTROIDS[key] = (spark, cents)
-    return cents
+    return _memo(
+        ("centroids", sf_dir, n_centroids),
+        spark,
+        lambda: train_centroids(load_table(spark, sf_dir, "embeddings"), n_centroids),
+    )
 
 
 def register(name: str, oracle: str | None = None):
@@ -867,6 +858,7 @@ def q_lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus pass). The marginal category sets derive from raw exactly:
     # every lang/source present in docs appears in some (lang, source)
     # group, so DISTINCT over raw equals DISTINCT over docs.
+    # cut: pin measured 0.40 -> 0.45 s at sf0.1 (lang_source_chisq, 0/5 pin wins)
     raw = (
         docs.groupBy("lang", "source")
         .agg(F.count(F.lit(1)).alias("o"))
@@ -2606,12 +2598,11 @@ def q_tukey_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     w_all = Window.partitionBy("event_type")
-    cum = (
+    cum = pin(
         vc.withColumn("c", F.sum("cnt").over(w_cum).cast("long"))
         .withColumn("n", F.sum("cnt").over(w_all).cast("long"))
         # the reduced distinct-value table feeds three consumers
         # (both quartile picks + the outlier count): materialize once
-        .localCheckpoint(eager=True)
     )
     q1 = (
         cum.filter(4 * F.col("c") >= F.col("n"))
@@ -4283,7 +4274,7 @@ def q_upsert_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # upd feeds the union AND the anti-join key list — pinned so the
     # update batch's window reduction runs once (plan audit r10: 3
     # events scans; now 2 — one per side, the merge floor)
-    upd = pin_corpus(latest(events.filter(F.col("ts") >= cutoff)))
+    upd = pin(latest(events.filter(F.col("ts") >= cutoff)))
     merged = upd.unionByName(snap.join(upd.select("user_id"), "user_id", "left_anti"))
     return merged.orderBy("user_id")
 
@@ -4347,12 +4338,12 @@ def q_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # their corpus aggregation re-ran per consumer (plan audit r10: 6
     # events scans). Pinned, the query keeps exactly three pushed-
     # filter corpus scans — the staged-funnel algorithm's floor.
-    v = pin_corpus(
+    v = pin(
         events.groupBy("user_id").agg(
             F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view")
         )
     )
-    c = pin_corpus(
+    c = pin(
         events.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") >= F.col("t_view"))
@@ -4438,10 +4429,9 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bf feeds the hit join AND the query universe; unpinned, its
     # corpus-sized exact ranker re-ran per consumer (plan audit r10:
     # 6 embeddings scans). The top-5 table is 16 x 5 rows — pin it.
-    bf = (
+    bf = pin(
         knn_bruteforce(emb, queries=queries, k=5)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
     )
     ivf = knn_ivf(
         emb, queries=queries, k=5, centroids=_trained_centroids(spark, sf_dir)
@@ -4723,6 +4713,7 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join — unpinned, the corpus lag window re-ran per consumer (plan
     # audit r10: 2 events scans; now ONE — the bigram_lm pin, same
     # shape)
+    # cut: pin measured 0.63 -> 0.68 s at sf0.1 (event_transition_matrix, 0/5 pin wins)
     pairs = (
         seq.filter(F.col("prev_type").isNotNull())
         .groupBy("prev_type", F.col("event_type").alias("next_type"))
@@ -5035,6 +5026,7 @@ def q_value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ≤10-row bounded histogram; feeds the totals aggregate AND the
     # term grid — unpinned, the corpus bucket aggregation re-ran per
     # consumer (plan audit r10: 2 events scans; now ONE)
+    # cut: pin measured 0.32 -> 0.42 s at sf0.1 (value_drift_psi, 0/5 pin wins)
     hist = split.groupBy("bucket").agg(
         F.sum(F.when(F.col("period") == "base", 1).otherwise(0)).alias("n_base"),
         F.sum(F.when(F.col("period") == "cur", 1).otherwise(0)).alias("n_cur"),
@@ -5094,7 +5086,7 @@ def q_user_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     # activity_week per user = MIN of wk over raw events) — unpinned,
     # two independent corpus aggregations scanned events twice (plan
     # audit r10; now ONE corpus pass)
-    activity = pin_corpus(ev.select("user_id", wk.alias("activity_week")).distinct())
+    activity = pin(ev.select("user_id", wk.alias("activity_week")).distinct())
     firsts = activity.groupBy("user_id").agg(F.min("activity_week").alias("cohort_week"))
     return (
         activity.join(firsts, "user_id")
@@ -5488,6 +5480,7 @@ def q_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus daily rollup re-ran per side (plan audit r10: 2 events
     # scans; now ONE — the §5 multi-consumer daily-aggregate
     # discipline)
+    # cut: pin measured 0.33 -> 0.45 s at sf0.1 (ewma_daily_revenue, 1/5 pin wins)
     daily = (
         ev.groupBy(F.col("ts").cast("date").alias("day"))
         .agg(F.sum(cents).alias("r_cents"))
@@ -5614,7 +5607,7 @@ def q_multi_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the bin-bucket range join runs once (plan audit r10: 4 events
     # scans unpinned; the pair table is attribution's natural
     # intermediate)
-    pairs = pin_corpus(
+    pairs = pin(
         conversion_window_pairs(ev).select("click_id", "purchase_id", "p_cents")
     )
     touch = pairs.groupBy("purchase_id").agg(F.count(F.lit(1)).alias("n_touch"))
@@ -6275,7 +6268,7 @@ def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpinned, the documents scan re-ran per side (plan audit r10: 3
     # documents scans). Pin it once — the dcda043 re-attach discipline
     # (one corpus pass materializes the 2-column lookup).
-    src = pin_corpus(docs.select("doc_id", "source"))
+    src = pin(docs.select("doc_id", "source"))
     pairs = ngram_jaccard_pairs(docs, threshold=0.8)
     return (
         pairs.join(src.withColumnRenamed("doc_id", "id1").withColumnRenamed("source", "s1"), "id1")
@@ -7147,6 +7140,7 @@ def q_benford_price_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ≤9-row bounded digit counts; feed the total AND the grid join —
     # unpinned, the corpus digit aggregation re-ran per consumer (plan
     # audit r10: 2 orders scans; now ONE)
+    # cut: pin measured 0.52 -> 0.64 s at sf0.1 (benford_price_digits, 1/5 pin wins)
     obs = (
         cents.select(F.substring(F.col("c").cast("string"), 1, 1).cast("long").alias("digit"))
         .groupBy("digit")
@@ -7219,7 +7213,7 @@ def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |users|-bounded; feeds cohort sizes AND the purchase join —
     # pinned so the corpus first-seen aggregation runs once (plan
     # audit r10: 3 events scans; now 2 — cohorting + purchase scan)
-    firstday = pin_corpus(
+    firstday = pin(
         events.groupBy("user_id").agg(F.min(day(F.col("ts"))).alias("cohort_day"))
     )
     sizes = firstday.groupBy("cohort_day").agg(
@@ -7459,10 +7453,10 @@ def q_cascade_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (plan audit r10: 5 customer + 3 orders scans). Both are bounded
     # key sets — pin once. The per-table totals stay separate count-
     # only scans (parquet-footer metadata reads).
-    forget = pin_corpus(
+    forget = pin(
         c.filter(F.col("c_custkey") % 97 == 0).select("c_custkey")
     )
-    fo = pin_corpus(
+    fo = pin(
         o.join(forget, o["o_custkey"] == forget["c_custkey"]).select("o_orderkey")
     )
 
@@ -7879,10 +7873,12 @@ def q_woe_iv_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grid — unpinned, the fact-dimension join + aggregation re-ran
     # per consumer (plan audit r10: 2 orders + 2 customer scans; now
     # ONE corpus pass — the target_encode_loo discipline)
-    seg = base.groupBy("seg").agg(
-        F.sum("pos").cast("long").alias("n_pos"),
-        (F.count(F.lit(1)) - F.sum("pos")).cast("long").alias("n_neg"),
-    ).localCheckpoint(eager=True)
+    seg = pin(
+        base.groupBy("seg").agg(
+            F.sum("pos").cast("long").alias("n_pos"),
+            (F.count(F.lit(1)) - F.sum("pos")).cast("long").alias("n_neg"),
+        )
+    )
     tot = seg.agg(
         F.sum("n_pos").cast("long").alias("tp"), F.sum("n_neg").cast("long").alias("tn")
     )
@@ -8069,6 +8065,7 @@ def q_conformal_interval_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     calibration fold (expect ≈0.9, ≥0.9 in expectation)."""
     from pyspark.sql import Window
 
+    # cut: pin measured 0.83 -> 1.11 s at sf0.1 (conformal_interval_daily, 0/5 pin wins)
     daily = (
         load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("day"))
@@ -8107,6 +8104,7 @@ def q_conformal_interval_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "x0",
     )
+    # cut: pin measured 0.83 -> 1.11 s at sf0.1 (conformal_interval_daily, 0/5 pin wins)
     resids = (
         daily.filter(F.col("day_idx") % 2 == 1)
         .crossJoin(F.broadcast(params))  # 1-row params broadcast (labeled)
@@ -8452,6 +8450,7 @@ def q_markov_next_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
         .alias("prev_type"),
     )
+    # cut: pin measured 0.54 -> 0.67 s at sf0.1 (markov_next_accuracy, 1/5 pin wins)
     pairs = (
         seq.filter(F.col("prev_type").isNotNull())
         .groupBy("prev_type", F.col("event_type").alias("next_type"))
@@ -8527,10 +8526,8 @@ def q_rolling_7d_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # the reduced (day, user) table feeds both the day grid and the
-    # fan-out: materialize once, never rescan raw events. Per-user
-    # rows are corpus-proportional -> persist (recomputable lineage),
-    # not localCheckpoint (r11 failure-semantics pass).
-    du = pin_corpus(du)
+    # fan-out: materialize once, never rescan raw events.
+    du = pin(du)
     days = du.select("day").distinct().select(F.col("day").alias("d"))
     fanned = du.select(
         "day",
@@ -8641,6 +8638,7 @@ def q_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
         .alias("prev_type"),
     )
+    # cut: pin measured 0.57 -> 0.66 s at sf0.1 (markov_entropy_rate, 1/5 pin wins)
     pairs = (
         seq.filter(F.col("prev_type").isNotNull())
         .groupBy("prev_type", F.col("event_type").alias("next_type"))
@@ -8852,7 +8850,7 @@ def q_char_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(sequence(1, length(text) - 1), i -> substring(text, i, 2))")
         ).alias("b"),
     )
-    cnt = pin_corpus(
+    cnt = pin(
         bg.groupBy("doc_id", "b").agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     tot = cnt.groupBy(F.col("doc_id").alias("td")).agg(
@@ -8917,6 +8915,7 @@ def q_xcorr_count_value_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a 7-row explode + equi-join on shifted day index (acf class,
     no inequality join); Pearson terms are exact BIGINT sums with
     one final float per lag (IEEE sqrt — identical both engines)."""
+    # cut: pin measured 0.44 -> 0.52 s at sf0.1 (xcorr_count_value_daily, 0/5 pin wins)
     daily = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.date_trunc("day", "ts").alias("day"))
@@ -9472,142 +9471,9 @@ def q_huber_regression_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return huber_regression_daily(load_table(spark, sf_dir, "orders"))
 
 
-# ROUND-6 ROTATION PLAN (EXECUTED in r6 — see VERIFIED_WINDOW below,
-# which supersedes this planning note; kept for the audit trail):
-# after CORRECTNESS_r05 lands, the remaining
-# never-driver-verified queue ALSO includes the twenty-two round-5
-# closing-batch additions (scd2_user_state, peak_concurrency_daily,
-# weighted_median_price, ipw_uplift_by_segment, cuped_adjusted_lift,
-# calibration_bins, jsd_source_unigrams, dedup_sorted_neighborhood,
-# markov_next_accuracy, rolling_7d_active_users, tfidf_cosine_topk,
-# foreachbatch_idempotent_upsert, markov_entropy_rate,
-# overdispersion_by_type, decision_stump_value, durbin_watson_daily,
-# char_bigram_entropy, xcorr_count_value_daily, wow_revenue_change,
-# clicks_full_outer_streaming, token_budget_pack,
-# tukey_outlier_fences — all with committed full-registry
-# oracle runs at THREE scale factors:
-# ORACLE_LOCAL_r5_complete_sf0.001.txt / _sf0.01.txt / _sf0.1.txt,
-# every one 0 failures).
-# Original plan follows: after CORRECTNESS_r05 lands, the remaining
-# never-driver-verified queue is 21 oracle-backed queries — the 15 r4
-# leftovers (dedup_edit_distance, zorder_codes, event_props_variant,
-# lexicon_hits, embedding_dim_stats, gap_fill_daily, skew_profile,
-# stable_dense_ids, snapshot_diff, top_event_paths,
-# time_decayed_user_value, running_value_since_purchase,
-# arrival_burstiness, zipf_fit, fk_integrity_profile) plus the six
-# round-5 additions (knn_ivfpq, gopher_quality_filters,
-# gopher_top_ngram_frac, c4_quality_filters, cross_source_dup_matrix,
-# dedup_rate_by_source, bloom_prejoin_audit, value_quantile_sketch,
-# nation_trade_pagerank, feature_hash_vectors, ngram_pmi,
-# hll_user_audit, matryoshka_recall_audit, and the sampled-training
-# trio kmeans_lloyd_sampled / pq_codes_sampled / knn_ivfpq_sampled) —
-# plus the two then-rows-only sketches
-# (approx_stats, sketch_weekly_users — "inherently rows-only" was the
-# r6-era view; SUPERSEDED: both moved to the portable register
-# sketches of operators/hll.py and are hash-oracled — sketch in r8,
-# approx_stats in r9 — so _ROWS_ONLY is empty now),
-# plus the FOURTEEN round-5-continuation additions
-# (promo_window_event_stats, dedup_triangle_stats, kneser_ney_bigram,
-# theil_sen_daily_revenue, seasonal_anomaly_daily,
-# session_windows_streaming, basket_part_pairs, revenue_gini,
-# revenue_lorenz_deciles, dedup_containment, jl_projection_audit,
-# pareto_frontier_parts, ks_purchase_vs_click, doc_length_lang_auc,
-# plus rfm_segments, orders_merkle_checksum, benford_price_digits,
-# cohort_ltv_curve, orders_unpivot_quarters, cusum_changepoint_daily,
-# mann_kendall_trend, readability_scores —
-# every one oracle-backed with committed sf0.01/sf0.001 checks),
-# plus the graph/community batch (dedup_label_propagation,
-# nbayes_source_confusion, dedup_kcore, cascade_delete_audit — none
-# in the r5 window), plus the FOURTEEN round-5 second-continuation
-# additions (ols_daily_trend, acf_daily_revenue, target_encode_loo,
-# nation_trade_hits, quantile_normalize_tokens, mmr_diversified_topk,
-# kcenter_coreset, silhouette_by_cluster, retrieval_ndcg_eval,
-# woe_iv_segments, wilson_lcb_return_rates, k_anonymity_audit,
-# conformal_interval_daily, filter_funnel_report — all oracle-backed
-# with committed sf0.01 checks in ORACLE_LOCAL_r5_final.txt; mmr and
-# kcenter carry recursive-CTE oracles that verify the greedy
-# SELECTION SEQUENCE itself). The queue now exceeds one 44-slot
-# rotation: prioritize (1) the r4 leftovers that have waited longest,
-# (2) the recursive-CTE/trained-literal shapes (mmr, kcenter,
-# silhouette) whose oracle machinery has never been driver-exercised,
-# (3) the TPC-H stragglers; the remainder rolls to r7.
-# ROUND-7 ROTATION — finish the verification debt in ONE rotation.
-# After CORRECTNESS_r06 (50/50 green), exactly 50 of the 251 registered
-# queries have never had a driver-verified row (r6 verdict "What's
-# missing" #1 lists them; recomputed from the CORRECTNESS_r01-r06 union
-# at rotation time — identical set). The window holds exactly 50
-# slots, so this round rotates ALL of them in and cumulative driver
-# coverage goes 201 -> 251 of 251 (100%) if the round is clean.
-#
-# To make that possible, the six reference-parity queries are UNPINNED
-# for THIS ROUND ONLY. That is safe, deliberately and verifiably:
-#   - each has SIX consecutive rounds of full driver-green history
-#     (CORRECTNESS_r01..r06: rows+schema+hash every round);
-#   - the judge independently re-ran the byte-for-byte golden replay
-#     suites (tests/test_core_golden.py, tests/test_reference_golden.py)
-#     in round 6 — green — and those suites run in every driver gate;
-#   - they return to the pinned head slots in round 8.
-# Every rotated-in query carries committed 3-scale-factor local oracle
-# evidence (ORACLE_LOCAL_r6_sf0.001/0.01/0.1: 251/251 green), and ten
-# of them were independently oracle-verified by the judge in r6.
-# sketch_weekly_users was then rows-only (estimator sketch with no
-# static oracle; within-error-of-exact asserted in tests) — it took
-# the weaker rows-only driver check, the last such query to do so.
-# (SUPERSEDED: r8 gave it the portable-register hash oracle; r9 did
-# the same for approx_stats — _ROWS_ONLY is empty now.)
-#
-# ROUND-8 ROTATION (EXECUTED — supersedes the r7 window below, kept
-# as _R7_WINDOW for the audit trail). CORRECTNESS_r07 landed 49/50
-# full-green (sketch_weekly_users rows-only by design, now upgraded to
-# a real oracle this round), taking cumulative driver coverage to
-# 251/251. Per the r7 verdict's #1 directive and COVERAGE.md's
-# commitment:
-#   - the six reference-parity queries RETURN TO THE PINNED HEAD SLOTS
-#     (the r7 unpin was a one-round exception; the window-policy test
-#     in tests/test_round2_queries.py is flipped back to pinned mode);
-#   - the remaining 44 slots run an oldest-driver-verified-first
-#     REFRESH: every query whose last driver row is round 2 (19
-#     queries, 6 rounds stale) plus the alphabetically-first 25 of the
-#     round-3 cohort. Recomputed from the CORRECTNESS_r01..r07 union;
-#     deterministic tie-break = name order within a round.
-#   - approx_stats (at r8 rotation time still on Spark's HLL++/
-#     approx-quantile internals, hence rows-only; SUPERSEDED in r9 by
-#     the portable sketch of operators/hll.py — hash-oracled since,
-#     _ROWS_ONLY now empty) was the oldest of all and refreshed its
-#     rows-only row; sketch_weekly_users collects its FIRST
-#     hash-verified row next time it rotates in (its r8 oracle is in
-#     the full local gate at 3 SFs regardless).
-# With the debt at zero, registration resumed with a SEVEN-query batch
-# (int8_quant_audit, skipgram_pmi, spearman_activity_value,
-# markov_removal_attribution, kmv_audience_overlap,
-# wasserstein_purchase_vs_click, pca_top_component — see the Round-8
-# batch section above), well under the <= 44/batch bound, queued for
-# the r9 window so the never-verified backlog stays below one rotation.
-# ROUND-9 ROTATION (EXECUTED — supersedes the r8 window below, kept
-# as _R8_WINDOW for the audit trail). CORRECTNESS_r08 landed 50/50
-# green (49 hash-verified + approx_stats rows-only by design). Per the
-# r8 verdict's #1/#2 directives and COVERAGE.md's "Round-9 rotation
-# plan", this window drains the driver-verification debt to ZERO:
-#   - the six reference-parity queries stay in the pinned head slots
-#     (standing policy);
-#   - ALL 24 never-driver-verified queries (everything registered
-#     after the r8 window was pinned: the seven r8-batch queries +
-#     the seventeen r8-continuation queries) take the next 24 slots —
-#     each carries committed 3-SF local oracle evidence
-#     (ORACLE_LOCAL_r8_*/r8c_*: 0 failures) and was independently
-#     re-run green by the judge at sf0.01 in the r8 verdict;
-#   - the remaining 20 slots run the oldest-driver-verified-first
-#     REFRESH recomputed from the CORRECTNESS_r01..r08 union
-#     (deterministic tie-break = name order within a round): the 19
-#     queries whose last driver row is round 3 plus the
-#     alphabetically-first round-4 query (ann_recall_audit).
-# The registry is FROZEN at 275 for round 9 (r8 verdict #2): zero new
-# registrations until CORRECTNESS_r09 lands, so cumulative driver
-# coverage closes at 275/275.
-# ROUND-10 ROTATION (EXECUTED — supersedes the r9 window below, kept
-# as _R9_WINDOW for the audit trail). CORRECTNESS_r09 landed 50/50
-# green, ALL hash-verified, closing cumulative driver coverage at
-# 275/275. With the never-verified queue empty, the debt is now
+# ROUND-10 ROTATION (EXECUTED). CORRECTNESS_r09 landed 50/50 green,
+# ALL hash-verified, closing cumulative driver coverage at 275/275.
+# With the never-verified queue empty, the debt is now
 # FRESHNESS (r9 verdict #1): the last-verified histogram over the
 # CORRECTNESS_r01..r09 union is {r4: 43, r5: 44, r6: 44, r7: 50,
 # r8: 44, r9: 50} — 87 queries' newest driver row is >= 4 rounds old.
@@ -9682,289 +9548,6 @@ VERIFIED_WINDOW: tuple[str, ...] = (
     "winsorized_event_values",
     # refresh: alphabetically-first round-5-cohort query (44th slot)
     "bigram_perplexity",
-)
-
-# Superseded r9 window, kept for the audit trail (CORRECTNESS_r09:
-# 50/50 green, all hash-verified — drained the never-verified queue):
-_R9_WINDOW: tuple[str, ...] = (
-    # reference parity (SURVEY.md §2) — pinned every round
-    "wordcount_lines",
-    "wordcount_union",
-    "distinct_sorted",
-    "range_bucket_sort",
-    "mr_facade_wordcount",
-    "mr_facade_sort",
-    # never-driver-verified queue (a): the round-8 batch
-    "int8_quant_audit",
-    "skipgram_pmi",
-    "spearman_activity_value",
-    "markov_removal_attribution",
-    "kmv_audience_overlap",
-    "wasserstein_purchase_vs_click",
-    "pca_top_component",
-    # never-driver-verified queue (b): the round-8 continuation
-    "good_turing_unigrams",
-    "logreg_quality_irls",
-    "isotonic_calibration",
-    "link_prediction_scores",
-    "hilbert_codes",
-    "als_factorization",
-    "logrank_test_conversion",
-    "phrase_search",
-    "mmd_embedding_drift",
-    "roc_curve_points",
-    "apriori_triples",
-    "binseg_changepoints",
-    "lm_greedy_generation",
-    "k_anon_generalization",
-    "vocab_growth_curve",
-    "ab_power_mde",
-    "huber_regression_daily",
-    # refresh cohort: last driver row = round 3 (name order), then the
-    # alphabetically-first round-4 query
-    "lang_id",
-    "multimodal_features",
-    "pii_redact",
-    "quality_score",
-    "rare_bigram_ratio",
-    "repetition_stats",
-    "revenue_by_nation",
-    "sequence_packing",
-    "session_windows_native",
-    "skewed_event_value_salted",
-    "text_normalize",
-    "tfidf_doc_terms",
-    "token_stats",
-    "top_orders_per_customer",
-    "tpch_q1_pricing",
-    "tpch_q3_shipping",
-    "unigram_surprise",
-    "winnow_fingerprints",
-    "word_freq",
-    "ann_recall_audit",
-)
-
-# Superseded r8 window, kept for the audit trail (CORRECTNESS_r08:
-# 50/50 green — 49 hash-verified + approx_stats rows-only by design):
-_R8_WINDOW: tuple[str, ...] = (
-    # reference parity (SURVEY.md §2) — pinned every round
-    "wordcount_lines",
-    "wordcount_union",
-    "distinct_sorted",
-    "range_bucket_sort",
-    "mr_facade_wordcount",
-    "mr_facade_sort",
-    # refresh cohort A: last driver row = round 2 (oldest first)
-    "approx_stats",
-    "cube_flag_status",
-    "customer_order_stats",
-    "embedding_neardup_exact",
-    "events_window_5m",
-    "mode_event_type_per_user",
-    "orders_status_pivot",
-    "rollup_orders_by_month",
-    "set_except",
-    "set_intersect",
-    "top100_orders_global",
-    "tpch_q10_returned",
-    "tpch_q14_promo",
-    "tpch_q19_disjunctive",
-    "tpch_q4_priority_exists",
-    "tpch_q5_local_supplier",
-    "user_event_type_sets",
-    "user_sessions",
-    "user_value_sliding_avg",
-    # refresh cohort B: last driver row = round 3 (first 25 by name)
-    "asof_last_signup",
-    "bigram_freq",
-    "brand_volume",
-    "canonical_best_quality",
-    "clean_corpus",
-    "contamination_check",
-    "corpus_mixture_sample",
-    "corpus_split_counts",
-    "dedup_components",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "deterministic_sample",
-    "doc_chunks",
-    "doc_fingerprints",
-    "embedding_neardup",
-    "event_json_stats",
-    "events_dedup_streaming",
-    "events_window_streaming",
-    "knn_bruteforce",
-    "knn_ivf",
-    "knn_lsh",
-)
-
-# Superseded r7 window, kept for the audit trail (CORRECTNESS_r07:
-# 49/50 full green + sketch_weekly_users rows-only by design):
-_R7_WINDOW: tuple[str, ...] = (
-    # r4-era leftovers (waited longest)
-    "dedup_edit_distance",
-    "zorder_codes",
-    "event_props_variant",
-    "lexicon_hits",
-    "embedding_dim_stats",
-    "gap_fill_daily",
-    "skew_profile",
-    "stable_dense_ids",
-    "snapshot_diff",
-    "top_event_paths",
-    "time_decayed_user_value",
-    "running_value_since_purchase",
-    "arrival_burstiness",
-    "zipf_fit",
-    "fk_integrity_profile",
-    # r5 dedup/sketch/embedding batch
-    "cross_source_dup_matrix",
-    "dedup_rate_by_source",
-    "bloom_prejoin_audit",
-    "value_quantile_sketch",
-    "nation_trade_pagerank",
-    "feature_hash_vectors",
-    "ngram_pmi",
-    "hll_user_audit",
-    "matryoshka_recall_audit",
-    "sketch_weekly_users",
-    # r5-continuation analytics/stats
-    "promo_window_event_stats",
-    "dedup_triangle_stats",
-    "kneser_ney_bigram",
-    "seasonal_anomaly_daily",
-    "session_windows_streaming",
-    "basket_part_pairs",
-    "dedup_containment",
-    "jl_projection_audit",
-    "doc_length_lang_auc",
-    "orders_merkle_checksum",
-    "cohort_ltv_curve",
-    "orders_unpivot_quarters",
-    "readability_scores",
-    # graph/community + classification batch
-    "dedup_label_propagation",
-    "nbayes_source_confusion",
-    "dedup_kcore",
-    "cascade_delete_audit",
-    # r5 second continuation (recursive-CTE / trained-literal oracles)
-    "acf_daily_revenue",
-    "target_encode_loo",
-    "nation_trade_hits",
-    "mmr_diversified_topk",
-    "kcenter_coreset",
-    "silhouette_by_cluster",
-    "retrieval_ndcg_eval",
-    "filter_funnel_report",
-)
-
-# Superseded r6 window, kept for the audit trail (the driver verified
-# all 50 of these in CORRECTNESS_r06.json — 50/50 full pass):
-_R6_WINDOW: tuple[str, ...] = (
-    # reference parity (SURVEY.md §2) — pinned every round
-    "wordcount_lines",
-    "wordcount_union",
-    "distinct_sorted",
-    "range_bucket_sort",
-    "mr_facade_wordcount",
-    "mr_facade_sort",
-    # --- round-6 rotation (executes the r5 verdict's #1 directive):
-    # registry growth is FROZEN at 251 this round; every non-pinned
-    # slot goes to a query that has NEVER had a driver-verified row
-    # (CORRECTNESS_r01-r05 union = 157 of 251), so cumulative driver
-    # coverage grows 157 -> 201 of 251 if all pass. Rotated-out r5
-    # occupants all have fresh driver-green history (CORRECTNESS_r05:
-    # 50/50 full pass) plus committed full-registry oracle evidence at
-    # three scale factors (ORACLE_LOCAL_r5_complete_*.txt).
-    # Priority per VERDICT.md r5 Next-round #1: (a) the 22 round-5
-    # closing-batch ops, (b) knn_ivfpq + the sampled-training trio,
-    # (c) the Gopher/C4 quality filters, (d) the stats batch, (e) the
-    # three plans REWRITTEN this round (rfm_segments,
-    # quantile_normalize_tokens, pareto_frontier_parts) so the driver
-    # hash-checks the two-phase rewrites directly
-    # (weighted_median_price and token_budget_pack — also rewritten —
-    # sit in the closing-batch block below; revenue_gini and
-    # revenue_lorenz_deciles in block (d) also moved to the two-phase
-    # rank this round).
-    # Still never-verified after this round (50, queued for r7 —
-    # rotate ALL of them before registering anything new):
-    # dedup_edit_distance, zorder_codes, event_props_variant,
-    # lexicon_hits, embedding_dim_stats, gap_fill_daily, skew_profile,
-    # stable_dense_ids, snapshot_diff, top_event_paths,
-    # time_decayed_user_value, running_value_since_purchase,
-    # arrival_burstiness, zipf_fit, fk_integrity_profile,
-    # cross_source_dup_matrix, dedup_rate_by_source,
-    # bloom_prejoin_audit, value_quantile_sketch, nation_trade_pagerank,
-    # feature_hash_vectors, ngram_pmi, hll_user_audit,
-    # matryoshka_recall_audit, promo_window_event_stats,
-    # dedup_triangle_stats, kneser_ney_bigram, seasonal_anomaly_daily,
-    # session_windows_streaming, basket_part_pairs, dedup_containment,
-    # jl_projection_audit, doc_length_lang_auc, orders_merkle_checksum,
-    # cohort_ltv_curve, orders_unpivot_quarters, readability_scores,
-    # dedup_label_propagation, nbayes_source_confusion, dedup_kcore,
-    # cascade_delete_audit, acf_daily_revenue, target_encode_loo,
-    # nation_trade_hits, mmr_diversified_topk, kcenter_coreset,
-    # silhouette_by_cluster, retrieval_ndcg_eval, filter_funnel_report,
-    # plus the then-rows-only sketch_weekly_users (approx_stats
-    # already had a rows-only driver row; both hash-oracled since
-    # r8/r9 via the portable sketches of operators/hll.py).
-    # (a) round-5 closing batch — interval analytics, divergence,
-    # experimentation, streaming protocol runners
-    "scd2_user_state",
-    "peak_concurrency_daily",
-    "weighted_median_price",
-    "ipw_uplift_by_segment",
-    "cuped_adjusted_lift",
-    "calibration_bins",
-    "jsd_source_unigrams",
-    "dedup_sorted_neighborhood",
-    "markov_next_accuracy",
-    "rolling_7d_active_users",
-    "tfidf_cosine_topk",
-    "foreachbatch_idempotent_upsert",
-    "markov_entropy_rate",
-    "overdispersion_by_type",
-    "decision_stump_value",
-    "durbin_watson_daily",
-    "char_bigram_entropy",
-    "xcorr_count_value_daily",
-    "wow_revenue_change",
-    "clicks_full_outer_streaming",
-    "token_budget_pack",
-    "tukey_outlier_fences",
-    # (b) IVF-PQ + sampled-training trio (r4 brief #4 knob, never
-    # driver-exercised)
-    "knn_ivfpq",
-    "kmeans_lloyd_sampled",
-    "pq_codes_sampled",
-    "knn_ivfpq_sampled",
-    # (c) Gopher/C4 quality-filter family
-    "gopher_quality_filters",
-    "gopher_top_ngram_frac",
-    "c4_quality_filters",
-    # (d) stats batch
-    "theil_sen_daily_revenue",
-    "cusum_changepoint_daily",
-    "mann_kendall_trend",
-    "ks_purchase_vs_click",
-    "revenue_gini",
-    "revenue_lorenz_deciles",
-    "benford_price_digits",
-    "wilson_lcb_return_rates",
-    "woe_iv_segments",
-    "k_anonymity_audit",
-    "conformal_interval_daily",
-    "ols_daily_trend",
-    # (e) plans rewritten this round (two-phase ranking / two-level
-    # skyline) — driver hash-checks the rewrites against unchanged
-    # oracles
-    "rfm_segments",
-    "quantile_normalize_tokens",
-    "pareto_frontier_parts",
 )
 
 

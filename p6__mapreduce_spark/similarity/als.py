@@ -133,6 +133,7 @@ def _half_step_spark(ratings: DataFrame, factors: DataFrame, key: str, other: st
     )
     for stage in _solve_stages():
         cur = cur.selectExpr("*", *[f"({e}) AS {a}" for a, e in stage])
+    # cut: per-sweep factor state, re-read by the next half-step
     return cur.selectExpr(f"{key} AS e", "nq1 AS qq1", "nq2 AS qq2").localCheckpoint(
         eager=True
     )
@@ -152,13 +153,13 @@ def als_factorization(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
             orders["o_custkey"].alias("u"), lineitem["l_partkey"].alias("i")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("r"))
-        .localCheckpoint(eager=True)  # 4 half-steps + the SSE pass fan out
+        .localCheckpoint(eager=True)  # cut: every half-step re-reads it
     )
     q = (
         ratings.select("i")
         .distinct()
         .selectExpr("i AS e", *[f"({e}) AS {a}" for a, e in INIT_ITEM_EXPRS])
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # cut: round-0 factor state
     )
     p = None
     for _ in range(SWEEPS):

@@ -111,7 +111,7 @@ def knn_ivfpq(
         # argmin/subtraction as _residual_df) and the ADC query vectors
         # (vec_id < n_queries) — the old shape paid four separate jobs
         # for these (r10 job-count optimization, arithmetic unchanged).
-        q = quant.localCheckpoint(eager=True)
+        q = quant.localCheckpoint(eager=True)  # cut: every training round re-reads it
         d, seeds = _dim_and_seeds(
             q, quant, max(k_coarse, k, n_queries), smallest=False, who="IVF-PQ"
         )
@@ -126,7 +126,7 @@ def knn_ivfpq(
         # coarse argmin + subtraction over the corpus (r10; this is the
         # full-table ORACLE path — the 100 TB shape is sample_mod, which
         # only ever streams the full corpus once, un-materialized)
-        res = _residual_df(q, coarse).localCheckpoint(eager=True)
+        res = _residual_df(q, coarse).localCheckpoint(eager=True)  # cut: every PQ round re-reads it
         codebooks = _train_all(
             res,
             m,
@@ -137,6 +137,7 @@ def knn_ivfpq(
         )
         queries = [r for r in seeds if r.vec_id < n_queries]
     else:
+        # cut: every training round re-reads it
         train = sampled_train_set(quant, sample_mod).localCheckpoint(eager=True)
         # seed collect over the SAMPLE: first k_coarse rows seed the
         # coarse trainer, first k rows' residuals seed the PQ trainer

@@ -226,10 +226,11 @@ def kmeans_lloyd(
         # one materialization feeds init + every iteration + the final
         # stats (2*iters + 2 separate jobs otherwise re-scan the source
         # and re-quantize each time — measured ~40% of wall at sf0.1)
-        q = quant.localCheckpoint(eager=True)
+        q = quant.localCheckpoint(eager=True)  # cut: every Lloyd round re-reads it
         cents = lloyd_train(q, k, iters)
         full = q
     else:
+        # cut: every Lloyd round re-reads it
         train = sampled_train_set(quant, sample_mod).localCheckpoint(eager=True)
         cents = lloyd_train(train, k, iters, init_smallest_k=True)
         full = quant  # single streaming pass below, no checkpoint

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from p6__mapreduce_spark.functions.pin import pin
 from p6__mapreduce_spark.similarity.kmeans import quantized_expr
 
 
@@ -88,11 +89,10 @@ def matryoshka_recall_audit(
     # window run ONCE (unpinned they re-ran per consumer, making the
     # "corpus is scanned once" contract above false: plan audit r10
     # counted 4 embeddings scans)
-    top = (
+    top = pin(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= topk)
         .select("trunc_d", "query_id", "vec_id")
-        .localCheckpoint(eager=True)
     )
     truth = top.filter(F.col("trunc_d") == d_full).select("query_id", "vec_id")
     audited = [int(nd) for nd in dict.fromkeys(trunc_dims)]

@@ -42,7 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from p6__mapreduce_spark.functions.pin import pin_corpus
+from p6__mapreduce_spark.functions.pin import pin
 
 Q = 1_000  # 1e-3 coordinate quantization
 TQ = "1.0e12"  # per-term comparison quantization
@@ -52,7 +52,7 @@ def mmd_embedding_drift(emb: DataFrame, *, vec_col: str = "embedding") -> DataFr
     """(label_a, label_b, n_a, n_b, mmd2_linear, mmd2_poly2) for every
     unordered label pair, ordered by (label_a, label_b)."""
     qx = F.round(F.col("x").cast("double") * F.lit(float(Q))).cast("long")
-    e = pin_corpus(  # feeds counts + means + moments once
+    e = pin(  # feeds counts + means + moments once
         emb.select("vec_id", "label", F.posexplode(vec_col).alias("pos", "x"))
         .select("vec_id", "label", (F.col("pos") + 1).alias("dim"), qx.alias("q"))
     )

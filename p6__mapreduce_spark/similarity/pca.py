@@ -52,6 +52,7 @@ def pca_top_component(emb: DataFrame, *, vec_col: str = "embedding") -> DataFram
     normalized-scatter units, and eigenvalue / trace — the fraction of
     (normalized) variance the top component carries."""
     q = F.round(F.col("x").cast("double") * F.lit(float(Q4))).cast("long")
+    # cut: pin measured 1.36 -> 2.13 s at sf0.1 (pca_top_component, 0/5 pin wins)
     e = (
         emb.select(F.col("vec_id"), F.posexplode(vec_col).alias("pos", "x"))
         .select("vec_id", (F.col("pos") + 1).alias("dim"), q.alias("q"))

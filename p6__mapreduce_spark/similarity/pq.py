@@ -113,9 +113,10 @@ def pq_codes(
         F.col(id_col).alias("vec_id"), quantized_expr(vec_col).alias("e")
     )
     if sample_mod is None:
-        q = quant.localCheckpoint(eager=True)
+        q = quant.localCheckpoint(eager=True)  # cut: every PQ round re-reads it
         train, smallest = q, False
     else:
+        # cut: every PQ round re-reads it
         train = sampled_train_set(quant, sample_mod).localCheckpoint(eager=True)
         q, smallest = quant, True
     d, seeds = _dim_and_seeds(train, quant, k, smallest=smallest, who="PQ training")
@@ -334,7 +335,7 @@ def knn_pq(
         # ONE seed collect serves d-inference, codebook init (vec_id<k)
         # and the ADC query vectors (vec_id<n_queries) — the old shape
         # paid three separate jobs (r10)
-        q = quant.localCheckpoint(eager=True)
+        q = quant.localCheckpoint(eager=True)  # cut: every PQ round re-reads it
         d, seeds = _dim_and_seeds(
             q, quant, max(k, n_queries), smallest=False, who="PQ encoding"
         )
@@ -344,6 +345,7 @@ def knn_pq(
         )
         queries = [r for r in seeds if r.vec_id < n_queries]
     else:
+        # cut: every PQ round re-reads it
         train = sampled_train_set(quant, sample_mod).localCheckpoint(eager=True)
         d, seeds = _dim_and_seeds(train, quant, k, smallest=True, who="PQ encoding")
         dsub = d // m

@@ -88,6 +88,7 @@ def mmr_diversified_topk(
     localCheckpointed once (≤ pool_size² rows) and every round is a
     bounded join + 1-row TakeOrdered over them."""
     spark = embeddings.sparkSession
+    # cut: every pick re-reads it
     pool = _rel_pool(embeddings, query_vec_id, pool_size).localCheckpoint(eager=True)
     a = pool.select(F.col("vec_id").alias("ida"), F.col("embedding").alias("va"), "rel_q")
     b = pool.select(F.col("vec_id").alias("idb"), F.col("embedding").alias("vb"))
@@ -102,7 +103,7 @@ def mmr_diversified_topk(
             .cast("long")
             .alias("sim_q"),
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # cut: every pick re-reads it
     )
     schema = "step long, doc_id long, rel_q long, mmr_q long"
     chosen: list[tuple[int, int, int, int]] = []  # (step, id, rel_q, mmr_q)
@@ -217,7 +218,7 @@ def kcenter_coreset(embeddings: DataFrame, *, k: int = 8) -> DataFrame:
         "vec_id",
         "v",
         _d2_q("v", F.lit(center_vec).cast("array<double>")).alias("mind_q"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)  # cut: round-0 maximin state
     for step in range(2, k + 1):
         far = (
             state.filter(~F.col("vec_id").isin([c[1] for c in centers]))
@@ -235,7 +236,7 @@ def kcenter_coreset(embeddings: DataFrame, *, k: int = 8) -> DataFrame:
             F.least(
                 F.col("mind_q"), _d2_q("v", F.lit(cvec).cast("array<double>"))
             ).alias("mind_q"),
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)  # cut: rebuilt every pick
     return local_frame(spark, centers, schema).orderBy("step")
 
 

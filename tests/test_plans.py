@@ -35,7 +35,7 @@ from p6__mapreduce_spark.plans import (  # noqa: E402  (public-API helpers)
 
 def _count_outside_cache(plan: str, needle: str) -> int:
     """Occurrences of ``needle`` in a plan tree EXCLUDING lines nested
-    under an ``InMemoryRelation`` — a pin_corpus-cached subtree is
+    under an ``InMemoryRelation`` — a pinned (persisted) subtree is
     printed inline once per consumer reference (and, materialized,
     once per AQE section), so raw substring counts over-report
     executed nodes; the cached subtree executes exactly once."""
@@ -242,7 +242,7 @@ def test_tfidf_single_explode_feeds_both_aggregations(spark):
     # tf and df must come from ONE explode of the corpus — a second
     # Generate NODE outside the pinned cache would re-tokenize and
     # re-shuffle the postings. Since r11 the tf relation is
-    # pin_corpus-persisted: both aggregations must read the cache, and
+    # pinned: both aggregations must read the cache, and
     # the only Generate lives inside the cached subtree (executed
     # exactly once to materialize it).
     from p6__mapreduce_spark.operators.ranking import tfidf_doc_terms

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
-"""Interleaved A/B for the r11 pin reclassification.
+"""Interleaved A/B of the shared-relation pin shape.
 
-Arm A = the retired shape (corpus pins via eager localCheckpoint, the
-r10 sweep's tool); arm B = the shipped shape (pin_corpus =
+Arm A = every ``pin`` call site run as an eager localCheckpoint (the
+r10 sweep's tool, and the parent shape of each site moved from
+localCheckpoint to ``pin``); arm B = the shipped shape (``pin`` =
 persist(MEMORY_AND_DISK) + eager count). Both arms run in ONE session,
 alternated rep by rep, so box drift hits them equally (the r10
 measurement discipline — absolute re-runs on this sandbox swing 2-4x
@@ -15,7 +16,7 @@ Prints one JSON line per query: {"query": ..., "a_med": ..., "b_med":
 ..., "a": [...], "b": [...], "rows_equal": true}.
 
 AB_ARM_A=none switches arm A from the retired localCheckpoint shape
-to the fully UNPINNED shape (pin_corpus = identity): the r9-and-
+to the fully UNPINNED shape (pin = identity): the r9-and-
 earlier plan where every consumer re-executes the corpus subtree.
 That is the arm the r10 verdict asked to measure at a scale where
 corpus passes dominate (item 2: sf1 A/B of the most-pinned queries).
@@ -42,15 +43,15 @@ def main() -> None:
         reps, args = int(args[0]), args[1:]
     names = args
 
+    from p6__mapreduce_spark import queries
     from p6__mapreduce_spark.functions import pin
-    from p6__mapreduce_spark.queries import QUERIES
     from p6__mapreduce_spark.session import get_session
 
     spark = get_session("ab_pins")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
 
-    # swap the dispatch target, not pin.pin_corpus: call sites bind
-    # pin_corpus by name at import and would never see a rebinding
+    # swap the dispatch target, not pin.pin: call sites bind pin by
+    # name at import and would never see a rebinding
     shipped_pin = pin._impl
 
     if os.environ.get("AB_ARM_A") == "none":
@@ -67,7 +68,7 @@ def main() -> None:
         pin._impl = arm_pin
         try:
             t0 = time.time()
-            df = QUERIES[name](spark, sf_dir)
+            df = queries.QUERIES[name](spark, sf_dir)
             rows = None
             if timed:
                 df.count()
@@ -77,6 +78,8 @@ def main() -> None:
         finally:
             pin._impl = shipped_pin
             spark.catalog.clearCache()
+            # a memo hit would skip the arm's pins in the memo build
+            queries._MEMO.clear()
         return dt, rows
 
     for name in names:

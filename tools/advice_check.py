@@ -168,14 +168,13 @@ RESOLUTIONS: list[dict] = [
         "file": "p6__mapreduce_spark/dedup/substring.py",
         "match": "extends eager localCheckpoint pinning from bounded aggregates to corpus-sized relations",
         "status": "fixed",
-        # r11: corpus-proportional pins (token tables here and in
-        # passage.py, gopher_top_ngram_frac, the per-side minhash
-        # postings, the bm25 per-doc relation) moved to pin_corpus =
-        # persist(MEMORY_AND_DISK) + eager count — recomputable lineage
-        # on executor loss, disk spill instead of corpus-scale
-        # executor-local checkpoint storage. Bounded pins keep
-        # localCheckpoint (classification in OPTIMIZATION_r11.md).
-        "must_match": r"pin_corpus\(",
+        # every shared relation (this token table included) goes
+        # through functions/pin.py::pin = persist(MEMORY_AND_DISK) +
+        # eager count — recomputable lineage on executor loss, disk
+        # spill instead of executor-local checkpoint storage;
+        # localCheckpoint is left only at allowlisted lineage cuts
+        # (tests/test_pin.py)
+        "must_match": r"toks = pin\(",
         "must_not_match": r"\.localCheckpoint\(",
     },
     {
@@ -183,17 +182,15 @@ RESOLUTIONS: list[dict] = [
         "file": "p6__mapreduce_spark/operators/robust.py",
         "match": "localCheckpoint(eager=True) inside operator/query constructors",
         "status": "accepted",
-        # Documented tradeoff + partial fix: corpus-sized pins now
-        # route through functions/pin.py whose PLAN_ONLY flag lets
-        # plan-audit tools skip the materialization job (persist
-        # registers the cache at call time, so the captured plan is
-        # unchanged). The BOUNDED localCheckpoint pins (like the daily
-        # rollup here) stay eager on purpose: a lazy localCheckpoint
-        # keeps full lineage in the plan until the first action, which
-        # would change the very plan shape the audits inspect, and the
+        # Documented tradeoff: every shared relation (the daily
+        # rollups here included) routes through functions/pin.py, whose
+        # PLAN_ONLY flag lets plan-audit tools skip the materialization
+        # job (persist registers the cache at call time, so the
+        # captured plan is unchanged). Pins stay eager on purpose: the
         # branches of one action race to recompute an unmaterialized
-        # pin (measured 2.5x on the minhash posting cache).
-        "must_match": r"localCheckpoint pins it",
+        # pin (measured 2.5x on the minhash posting cache). The eager
+        # localCheckpoints left are lineage cuts in driver loops.
+        "must_match": r"One eager pin\s+shares it",
         "must_not_match": None,
     },
     {
@@ -215,11 +212,11 @@ RESOLUTIONS: list[dict] = [
         "file": "tools/ab_pins.py",
         "match": "Monkeypatching pin.pin_corpus is ineffective",
         "status": "fixed",
-        # pin_corpus dispatches through pin._impl, which the A/B arms
-        # swap; tests/test_pin.py proves a swap reaches queries.py's
-        # by-name import
+        # pin (formerly pin_corpus) dispatches through pin._impl,
+        # which the A/B arms swap; tests/test_pin.py proves a swap
+        # reaches queries.py's by-name import
         "must_match": r"pin\._impl = arm_pin",
-        "must_not_match": r"pin\.pin_corpus = ",
+        "must_not_match": r"pin\.pin(_corpus)? = ",
     },
     {
         "name": "r11-stream-partitions-conf-leak",
@@ -231,6 +228,30 @@ RESOLUTIONS: list[dict] = [
         # tests/test_streaming.py fails start() in each runner
         "must_match": r"with stream_partitions\(spark, src\)",
         "must_not_match": r"set_stream_partitions",
+    },
+    {
+        "name": "r11-scale-gen-scalar-jitter",
+        "file": "tools/scale_gen.py",
+        "match": "The embeddings jitter is a per-shard scalar",
+        "status": "fixed",
+        # the offset mixes list_transform's element index j with the
+        # shard, so clones move in direction; tests/test_scale_gen.py
+        # checks per-dim and per-shard offsets and a byte-identical rerun
+        "must_match": r"list_transform\(embedding, \(x, j\) -> ",
+        "must_not_match": r"list_transform\(embedding, x -> ",
+    },
+    {
+        "name": "r11-pins-never-unpersisted",
+        "file": "p6__mapreduce_spark/functions/pin.py",
+        "match": "persists MEMORY_AND_DISK with an eager count but nothing ever unpersists",
+        "status": "fixed",
+        # only the harness knows when a query ends: pin.py states the
+        # contract, and every harness that runs queries in one session
+        # (bench.py, perfbench/run.py, tools/ab_pins.py,
+        # tools/ab_stream.py, tools/oracle_check.py, tests/test_plans.py)
+        # calls clearCache between queries
+        "must_match": r"every harness that runs queries\s+in one session must make that call between queries",
+        "must_not_match": None,
     },
 ]
 

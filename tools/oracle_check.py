@@ -136,6 +136,9 @@ def main() -> int:
             line = compare(name, fn(spark, sf_dir), con, oracles.get(name))
         except Exception as exc:  # noqa: BLE001
             line = f"{name}: ERROR {type(exc).__name__}: {exc}"
+        finally:
+            # the query has ended: release its pins (functions/pin.py)
+            spark.catalog.clearCache()
         if "OK" not in line and "rows-only" not in line:
             failed += 1
         print(line, flush=True)

@@ -94,9 +94,11 @@ def build(src: str, dst: str, n: int) -> None:
                     f"CAST(length(regexp_replace(text, '([a-z0-9]+)', '\\1q{i}', 'g')) AS BIGINT) AS n_chars"
                 )
             if table == "embeddings" and i > 0:
+                # j is list_transform's 1-based element index: the
+                # offset mixes (shard, dim), so a clone's direction moves
                 repl.append(
-                    "CAST(list_transform(embedding, x -> x + CAST("
-                    f"(((({i} * 97 + 13) * 2654435761) % 1000) / 1000.0 - 0.5) * 0.2"
+                    "CAST(list_transform(embedding, (x, j) -> x + CAST("
+                    f"(((({i} * 7919 + j) * 2654435761 + 13) % 1000) / 1000.0 - 0.5) * 0.2"
                     " AS FLOAT)) AS FLOAT[]) AS embedding"
                 )
             replace = f"* REPLACE ({', '.join(repl)})" if repl else "*"

@@ -46,7 +46,7 @@ def main() -> None:
     # plan-only: skip corpus-pin materialization jobs at construction
     # (r10 ADVICE #2). persist registers the cache at call time, so the
     # captured plans — and these counts — are unchanged; note that a
-    # pin_corpus relation's single materialization pass appears in the
+    # pinned relation's single materialization pass appears in the
     # plan as the cached subtree's scan (+1 per table vs the r10
     # localCheckpoint shape, which hid that pass at construction time).
     pin.PLAN_ONLY = True
