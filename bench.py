@@ -420,40 +420,6 @@ EXPECTED_REGRESSIONS: dict[str, dict] = {
     # prune, as designed).
 }
 
-# Variance-band ledger (r9 verdict #5): queries whose UNCHANGED plan
-# has a documented multi-round cold-time oscillation that the
-# round-over-round flag keeps re-triggering. dedup_kcore's iterative
-# peel runs ~dozens of tiny jobs, so its cold time is dominated by
-# scheduler/queue latency, not compute: 4.08 / 2.65 / 2.39 / 3.30 s
-# across r6-r9 on a byte-identical plan, re-adjudicated as variance
-# three rounds running. A band entry says: while the implementation
-# file is UNCHANGED (sha-pinned — the plan-hash key the verdict asked
-# for, invalidated by any edit) and the new time is within the
-# documented envelope, the verdict is "variance_band" with no recheck.
-# An edited impl or a time past the envelope falls through to the
-# genuine recheck adjudication.
-VARIANCE_BANDS: dict[str, dict] = {
-    "dedup_kcore": {
-        "hi_s": 4.5,  # max of the observed envelope (4.08) + headroom
-        "impl": "p6__mapreduce_spark/dedup/kcore.py",
-        "impl_sha12": "cd8f987e13f4",
-        "reason": (
-            "many-tiny-jobs scheduler-latency profile: iterative "
-            "k-core peel, cold 2.39-4.08s across r6-r9 on an "
-            "unchanged plan (r9 verdict #5 retires the per-round "
-            "re-adjudication loop with this band)"
-        ),
-    },
-}
-
-
-def _impl_sha12(rel_path: str) -> str:
-    import hashlib
-
-    p = os.path.join(os.path.dirname(os.path.abspath(__file__)), rel_path)
-    return hashlib.sha256(open(p, "rb").read()).hexdigest()[:12]
-
-
 # Iterative training / pair-generation / literal-matrix queries whose
 # cold-run codegen+JIT noise swamps round-over-round deltas: timed 3x,
 # {cold, steady} both reported (r4 verdict "Next round" #8). The set
@@ -718,16 +684,6 @@ def main() -> None:
                 continue
             if exp is not None:
                 entry["stale_expected_entry_round"] = exp["round"]
-            band = VARIANCE_BANDS.get(n)
-            if band is not None and _impl_sha12(band["impl"]) == band["impl_sha12"]:
-                if entry["now"] <= band["hi_s"]:
-                    # documented oscillation envelope on a sha-pinned
-                    # unchanged implementation (r9 verdict #5)
-                    entry["verdict"] = "variance_band"
-                    entry["band_hi_s"] = band["hi_s"]
-                    entry["band_reason"] = band["reason"]
-                    continue
-                entry["band_exceeded_hi_s"] = band["hi_s"]
             t0 = time.time()
             QUERIES[n](spark, sf_dir).count()
             entry["recheck_steady"] = round(time.time() - t0, 3)

@@ -47,7 +47,7 @@ def label_propagation(pairs: DataFrame, rounds: int = 3) -> DataFrame:
     # cut: pin measured 4.50 -> 5.21 s at sf0.1 (dedup_label_propagation, 0/5 pin wins)
     edges = pairs.select(
         F.col("id1").cast("long").alias("a"), F.col("id2").cast("long").alias("b")
-    ).localCheckpoint(eager=True)  # pin: reused every round
+    ).localCheckpoint(eager=True)
     sym = edges.unionAll(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     labels = sym.select(F.col("a").alias("v")).distinct().select(
         "v", F.col("v").alias("label")

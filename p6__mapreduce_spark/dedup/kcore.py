@@ -39,9 +39,11 @@ def kcore(pairs: DataFrame, k: int = 2, rounds: int = 6) -> DataFrame:
     Runs exactly ``rounds`` synchronous peel rounds and raises
     ValueError if the peel had not converged by then (making the
     fixed-round oracle exact for every value this returns)."""
+    # cut: every in-plan peel round re-reads the edges; pin measured
+    # 6.68 -> 17.87 s at sf0.1 (dedup_kcore, 0/5 pin wins)
     edges = pairs.select(
         F.col("id1").cast("long").alias("a"), F.col("id2").cast("long").alias("b")
-    ).localCheckpoint(eager=True)  # pin: reused every round
+    ).localCheckpoint(eager=True)
     sym = edges.unionAll(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
     def survivors(alive: DataFrame) -> DataFrame:
@@ -59,6 +61,7 @@ def kcore(pairs: DataFrame, k: int = 2, rounds: int = 6) -> DataFrame:
     # convergence check: one more peel must be a no-op (bounded driver
     # traffic: two counts). Confluence of peeling then guarantees
     # `alive` IS the k-core, so the R-round oracle replay is exact.
+    # cut: the rounds-deep peel plan feeds two counts and the degree join
     alive = alive.localCheckpoint(eager=True)
     n_now = alive.count()
     n_next = survivors(alive).count()

@@ -234,9 +234,9 @@ def minhash_estimate_vs_exact(
     """
     postings = shingle_postings(docs, k)
     sigs = minhash_signatures(docs, k, num_hashes, postings=postings).select("doc_id", "sig")
-    # exact_pairs lets callers supply an already-materialized (id1, id2,
-    # jaccard) edge set (the engine's shared LSH memo) instead of
-    # recomputing the inverted-index verification here
+    # exact_pairs lets callers supply an (id1, id2, jaccard) edge set
+    # (the registry passes the LSH-verified pairs) instead of running
+    # the full inverted-index verification here
     exact = (
         exact_pairs
         if exact_pairs is not None

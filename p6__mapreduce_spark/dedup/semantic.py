@@ -53,17 +53,10 @@ def semantic_dedup(
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """(vec_id, list_id, keep) — keep=false for the higher-id member of
-    every within-cluster pair with cosine >= threshold.
-
-    ``centroids`` lets callers share one trained model across operators
-    (knn_ivf and semantic_dedup train identically); training is a Spark
-    sample job, so reuse saves a full scan per extra caller."""
-    cents = centroids if centroids is not None else train_centroids(
-        embeddings, n_centroids=n_centroids, vec_col=vec_col
-    )
+    every within-cluster pair with cosine >= threshold."""
+    cents = train_centroids(embeddings, n_centroids=n_centroids, vec_col=vec_col)
     # assigned feeds both pair sides AND the final keep join; pinned so
     # the corpus argmin projection runs once (plan audit r10: 3
     # embeddings scans unpinned — the guide-§8 "fingerprint once" shape)
@@ -143,7 +136,6 @@ def cluster_medoids(
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """(list_id, medoid_id, n_members, score_q9): the MEDOID of every
     coarse cluster — the actual member maximizing total cosine
@@ -156,9 +148,7 @@ def cluster_medoids(
     the per-member integer sum, so the argmax is exact on any
     partitioning; ties break by member id. Single-member clusters
     yield their member with score 0 (no pairs)."""
-    cents = centroids if centroids is not None else train_centroids(
-        embeddings, n_centroids=n_centroids, vec_col=vec_col
-    )
+    cents = train_centroids(embeddings, n_centroids=n_centroids, vec_col=vec_col)
     # same 3-consumer pin as semantic_dedup (pair sides + member join)
     assigned = pin(ivf_assign(embeddings, cents, vec_col=vec_col))
     a = assigned.select(

@@ -35,7 +35,12 @@ def triangle_stats(pairs: DataFrame) -> DataFrame:
     Every node that appears in an edge is output (isolated nodes have
     no edges to appear with), ordered by id.
     """
-    edges = pairs.select(F.col("id1").cast("long").alias("a"), F.col("id2").cast("long").alias("b"))
+    # cut: the edges feed the degree count and every arc branch of one
+    # action; pin measured 5.30 -> 19.40 s at sf0.1 (dedup_triangle_stats,
+    # 0/5 pin wins), unmaterialized ran a 3 GB driver heap out of memory
+    edges = pairs.select(
+        F.col("id1").cast("long").alias("a"), F.col("id2").cast("long").alias("b")
+    ).localCheckpoint(eager=True)
     deg = (
         edges.select(F.col("a").alias("v"))
         .unionAll(edges.select(F.col("b").alias("v")))

@@ -17,12 +17,15 @@ mechanism.
   :func:`pin`, and each such call says why at the call:
   state that a driver loop rebuilds or re-reads on every round (a
   persisted relation re-embeds its full lineage in every round's plan;
-  logreg measured 27% slower that way), values that must outlive the
-  harnesses' ``clearCache`` (``queries._memo``), relations whose
+  logreg measured 27% slower that way), relations whose
   ``spark_partition_id()`` must not change between two jobs
   (``functions/ranks.py::two_phase_rank``), and shared relations where
   ``pin`` measured slower than the cut (the numbers are at the call;
   OPTIMIZATION_r11.md §1). ``tests/test_pin.py`` holds the allowlist.
+
+Nothing is materialized across queries: each query builds every
+relation it reads from its own inputs, so a rerun over changed files
+sees the change.
 
 The eager ``count()`` matters: the branches of a single action are
 scheduled concurrently, and lazily-cached branches race — each

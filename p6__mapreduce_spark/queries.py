@@ -26,64 +26,19 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE_SQL: dict[str, str] = {}
 
-# Memoized per (session, key): the MinHash-LSH pair edges and the
-# connected components derived from them (the most expensive shared
-# prefix in the registry — consumed by dedup_minhash_lsh,
-# dedup_components, canonical_best_quality and clean_corpus), and the
-# IVF/SemDeDup coarse centroids (knn_ivf and semantic_dedup train the
-# identical model). The in-process analogue of the written intermediate
-# a 100 TB pipeline would fan curation policies out from.
-_MEMO: dict[tuple, tuple[SparkSession, object]] = {}
-
-
-def _memo(key: tuple, spark: SparkSession, build):
-    hit = _MEMO.get(key)
-    if hit is not None and hit[0] is spark:  # session guard: drop stopped-session entries
-        return hit[1]
-    value = build()
-    if isinstance(value, DataFrame):
-        # cut, not pin: the value must outlive the harnesses' per-query clearCache
-        value = value.localCheckpoint(eager=True)
-    _MEMO[key] = (spark, value)
-    return value
-
-
-def _lsh_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> DataFrame:
-    """Memoized (id1, id2) near-dup pair edges from MinHash-LSH banding
-    + exact-Jaccard verification. Deterministic, so cache reuse is
-    indistinguishable from recompute."""
+def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id1, id2) near-dup pair edges at Jaccard >= 0.8: MinHash-LSH
+    banding + exact-Jaccard verification over the documents table."""
     from p6__mapreduce_spark.dedup.minhash import minhash_lsh_pairs
 
-    return _memo(
-        ("pairs", sf_dir, threshold),
-        spark,
-        lambda: minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), threshold=threshold),
-    )
+    return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), threshold=0.8)
 
 
-def _lsh_components(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> DataFrame:
-    """Memoized (doc_id, component) assignment over ``_lsh_pairs`` edges."""
+def _lsh_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, component) assignment over the ``_lsh_pairs`` edges."""
     from p6__mapreduce_spark.dedup.components import dedup_components
 
-    return _memo(
-        ("components", sf_dir, threshold),
-        spark,
-        lambda: dedup_components(
-            load_table(spark, sf_dir, "documents"), _lsh_pairs(spark, sf_dir, threshold)
-        ),
-    )
-
-
-def _trained_centroids(spark: SparkSession, sf_dir: str, n_centroids: int = 16) -> list[list[float]]:
-    """Memoized IVF/SemDeDup coarse centroids: the sample job and
-    k-means run once per (session, sf_dir, k)."""
-    from p6__mapreduce_spark.similarity.ivf import train_centroids
-
-    return _memo(
-        ("centroids", sf_dir, n_centroids),
-        spark,
-        lambda: train_centroids(load_table(spark, sf_dir, "embeddings"), n_centroids),
-    )
+    return dedup_components(load_table(spark, sf_dir, "documents"), _lsh_pairs(spark, sf_dir))
 
 
 def register(name: str, oracle: str | None = None):
@@ -514,7 +469,7 @@ def q_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-banded MinHash with exact-Jaccard verification: output equals
     the exact pair set (P[miss at j>=0.8] ~ 8e-8 with 16 bands x 2)."""
-    return _lsh_pairs(spark, sf_dir, threshold=0.8).orderBy("id1", "id2")
+    return _lsh_pairs(spark, sf_dir).orderBy("id1", "id2")
 
 
 def _editdist_oracle() -> str:
@@ -526,7 +481,7 @@ def _editdist_oracle() -> str:
 @register("dedup_edit_distance", oracle=_editdist_oracle())
 def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second-stage edit-distance verification of the near-dup pair
-    set: per Jaccard>=0.8 pair (shared memoized LSH edges), character
+    set: per Jaccard>=0.8 pair (the ``_lsh_pairs`` edges), character
     Levenshtein + normalized edit similarity. Distinguishes true
     revisions (low distance) from shuffled-vocabulary templates (high
     distance at equal Jaccard); cost scales with duplicate count, not
@@ -534,7 +489,7 @@ def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6__mapreduce_spark.dedup.editdist import edit_distance_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    return edit_distance_pairs(docs, _lsh_pairs(spark, sf_dir, threshold=0.8)).orderBy(
+    return edit_distance_pairs(docs, _lsh_pairs(spark, sf_dir)).orderBy(
         "id1", "id2"
     )
 
@@ -1227,12 +1182,7 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6__mapreduce_spark.similarity.ivf import knn_ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return knn_ivf(
-        emb,
-        queries=emb.filter(F.col("vec_id") < 16),
-        k=5,
-        centroids=_trained_centroids(spark, sf_dir),
-    )
+    return knn_ivf(emb, queries=emb.filter(F.col("vec_id") < 16), k=5)
 
 
 def _dim_stats_oracle() -> str:
@@ -1319,10 +1269,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n²/n_clusters scale path for embedding-level dedup."""
     from p6__mapreduce_spark.dedup.semantic import semantic_dedup
 
-    return semantic_dedup(
-        load_table(spark, sf_dir, "embeddings"),
-        centroids=_trained_centroids(spark, sf_dir),
-    )
+    return semantic_dedup(load_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -1916,7 +1863,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy per round, lineage truncated via localCheckpoint) -> one
     canonical doc (min id) per cluster. The oracle computes the same
     closure as a recursive CTE over the exact Jaccard pair set."""
-    return _lsh_components(spark, sf_dir, threshold=0.8).orderBy("doc_id")
+    return _lsh_components(spark, sf_dir).orderBy("doc_id")
 
 
 _LEAKAGE_SPLIT_ORACLE = f"""
@@ -1937,12 +1884,12 @@ def q_leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-aware train/val/test assignment: the split key is the
     near-dup COMPONENT, not the document — so a train doc can never be
     a near-duplicate of a val/test doc (the leakage plain per-doc
-    hashing permits). Composition of the shared memoized components
-    with the deterministic hash splitter; at 100 TB the component map
+    hashing permits). Composition of the ``_lsh_components``
+    assignment with the deterministic hash splitter; at 100 TB the component map
     is the written intermediate every curation policy fans out from."""
     from p6__mapreduce_spark.operators.pipeline import _key_hash_bucket
 
-    comp = _lsh_components(spark, sf_dir, threshold=0.8)
+    comp = _lsh_components(spark, sf_dir)
     bucket = _key_hash_bucket(F.col("component"), 100)
     return comp.select(
         "doc_id",
@@ -3062,7 +3009,7 @@ def q_canonical_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p6__mapreduce_spark.operators.text_analysis import quality_score
 
     docs = load_table(spark, sf_dir, "documents")
-    comp = _lsh_components(spark, sf_dir, threshold=0.8)
+    comp = _lsh_components(spark, sf_dir)
     q3 = (
         F.col("len_ok")
         + F.col("tok_len_ok")
@@ -3682,7 +3629,7 @@ def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         (F.col("len_ok") + F.col("tok_len_ok") + (F.col("diversity") >= 0.3).cast("int")).alias("q"),
     )
-    losers = _lsh_pairs(spark, sf_dir, 0.8).select(F.col("id2").alias("doc_id")).distinct()
+    losers = _lsh_pairs(spark, sf_dir).select(F.col("id2").alias("doc_id")).distinct()
     return (
         q.filter(F.col("q") >= 2)
         .join(losers, "doc_id", "left_anti")
@@ -4433,9 +4380,7 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_bruteforce(emb, queries=queries, k=5)
         .select("query_id", "neighbor_id")
     )
-    ivf = knn_ivf(
-        emb, queries=queries, k=5, centroids=_trained_centroids(spark, sf_dir)
-    ).select("query_id", "neighbor_id")
+    ivf = knn_ivf(emb, queries=queries, k=5).select("query_id", "neighbor_id")
     hits = bf.join(ivf, ["query_id", "neighbor_id"]).select("query_id", "neighbor_id")
     return (
         bf.select("query_id")
@@ -4462,13 +4407,13 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the exact value on every true near-dup pair — run before trusting
     estimate-only thresholds at corpus scale. Deterministic permutations
     are plan constants, so even the ESTIMATES are bit-exact against the
-    DuckDB replica. The exact pair set comes from the shared LSH memo
-    (same threshold), so only the signature join is new work here."""
+    DuckDB replica. The exact pair set is the ``_lsh_pairs`` edge set
+    (same threshold), joined to the signatures of both ends."""
     from p6__mapreduce_spark.dedup.minhash import minhash_estimate_vs_exact
 
     return minhash_estimate_vs_exact(
         load_table(spark, sf_dir, "documents"),
-        exact_pairs=_lsh_pairs(spark, sf_dir, threshold=0.8),
+        exact_pairs=_lsh_pairs(spark, sf_dir),
     )
 
 
@@ -4563,11 +4508,10 @@ def _cluster_stats_oracle() -> str:
 def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate cluster-size profile (how much of the corpus is
     boilerplate? what's the largest template family?) — two cheap
-    aggregations over the memoized connected-components assignment, so
-    it shares all heavy lifting (LSH edges + label propagation) with
-    dedup_components/clean_corpus."""
+    aggregations over the ``_lsh_components`` assignment (LSH edges +
+    min-label propagation), the same builder dedup_components runs."""
     return (
-        _lsh_components(spark, sf_dir, threshold=0.8)
+        _lsh_components(spark, sf_dir)
         .groupBy("component")
         .agg(F.count(F.lit(1)).alias("cluster_size"))
         .groupBy("cluster_size")
@@ -6159,16 +6103,13 @@ def q_cluster_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The best REAL representative of every coarse semantic cluster
     (medoid = member maximizing total within-cluster cosine) — what
     you read, label, or ship as a few-shot exemplar; centroids are
-    synthetic averages, medoids are actual documents. Shares the
-    memoized trained centroids with knn_ivf/semantic_dedup; same
+    synthetic averages, medoids are actual documents. Trains the same
+    coarse centroids as knn_ivf/semantic_dedup; same
     n²/n_clusters bounded pair space; 1e-9-quantized cosine sums make
     the argmax exact on any partitioning (dedup/semantic.py)."""
     from p6__mapreduce_spark.dedup.semantic import cluster_medoids
 
-    return cluster_medoids(
-        load_table(spark, sf_dir, "embeddings"),
-        centroids=_trained_centroids(spark, sf_dir),
-    )
+    return cluster_medoids(load_table(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -6705,13 +6646,13 @@ def _triangle_oracle() -> str:
 @register("dedup_triangle_stats", oracle=_triangle_oracle())
 def q_dedup_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle density of the near-dup graph (degree-oriented wedge
-    join over the shared memoized LSH edges): separates clique-like
+    join over the ``_lsh_pairs`` edges): separates clique-like
     true-copy clusters (lcc ~ 1, safe to collapse) from chain-like
     transitive over-merges (lcc ~ 0, needs review) — the signal
     component SIZE alone cannot provide."""
     from p6__mapreduce_spark.dedup.triangles import triangle_stats
 
-    return triangle_stats(_lsh_pairs(spark, sf_dir, threshold=0.8))
+    return triangle_stats(_lsh_pairs(spark, sf_dir))
 
 
 def _kneser_ney_oracle() -> str:
@@ -7365,7 +7306,7 @@ def q_dedup_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|edges|), corpus never re-enters the loop."""
     from p6__mapreduce_spark.dedup.communities import label_propagation
 
-    return label_propagation(_lsh_pairs(spark, sf_dir, threshold=0.8), rounds=3)
+    return label_propagation(_lsh_pairs(spark, sf_dir), rounds=3)
 
 
 def _nbayes_oracle() -> str:
@@ -7400,7 +7341,7 @@ def q_dedup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact for every value returned."""
     from p6__mapreduce_spark.dedup.kcore import kcore
 
-    return kcore(_lsh_pairs(spark, sf_dir, threshold=0.8), k=2, rounds=6)
+    return kcore(_lsh_pairs(spark, sf_dir), k=2, rounds=6)
 
 
 @register(
@@ -7680,14 +7621,15 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("silhouette_by_cluster")  # oracle generated per sf-dir in get_oracle_sql()
 def q_silhouette_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simplified (centroid-based) silhouette per cluster over the
-    shared IVF/SemDeDup coarse centroids — the O(n·k) clustering-quality
+    IVF/SemDeDup coarse centroids — the O(n·k) clustering-quality
     gate that answers "are these clusters real?" before the quantizer
     ships. Same trained-literal discipline as knn_ivf, so even this
     model-quality metric is exactly oracle-checked."""
+    from p6__mapreduce_spark.similarity.ivf import train_centroids
     from p6__mapreduce_spark.similarity.silhouette import silhouette_by_cluster
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return silhouette_by_cluster(emb, _trained_centroids(spark, sf_dir, 16))
+    return silhouette_by_cluster(emb, train_centroids(emb, 16))
 
 
 # nDCG@10 discount literals: round(1e9 / log2(i+1)) for rank i = 1..10,
@@ -9494,6 +9436,11 @@ def q_huber_regression_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The registry STAYS FROZEN at 275 for round 10 (r9 verdict #1: frozen
 # until the histogram's tail reaches <= 3 rounds; after a green r10
 # the tail is r5 = 5 rounds, so no registrations this round either).
+# Later rotation: the window covers what changed. The 13 queries whose
+# plans changed when the cross-query memo was deleted replace the 13
+# name-first unchanged members of the round-4 cohort (all 44 refresh
+# entries were last driver-verified in the same round, so the cohort
+# order and name order decide).
 VERIFIED_WINDOW: tuple[str, ...] = (
     # reference parity (SURVEY.md §2) — pinned every round
     "wordcount_lines",
@@ -9502,21 +9449,10 @@ VERIFIED_WINDOW: tuple[str, ...] = (
     "range_bucket_sort",
     "mr_facade_wordcount",
     "mr_facade_sort",
-    # refresh: the full round-4 cohort (last driver row = r4, name order)
-    "append_finalized_windows_streaming",
-    "bigram_entropy",
-    "bigram_lm",
-    "bm25_scores",
-    "clicks_to_purchases_streaming",
+    # refresh: the round-4 cohort (last driver row = r4, name order)
+    # minus its 13 name-first members whose plans did not change,
+    # evicted for the group at the end
     "dedup_cluster_stats",
-    "dedup_simhash64",
-    "dedup_simhash64_pairs",
-    "doc_length_histogram",
-    "dup_ngram_coverage",
-    "event_neighbor_counts",
-    "event_span_per_user",
-    "events_window_sliding",
-    "group_kfold_splits",
     "grouping_sets_explicit",
     "median_price_by_priority",
     "minhash_estimate_error",
@@ -9546,8 +9482,25 @@ VERIFIED_WINDOW: tuple[str, ...] = (
     "upsert_latest_snapshot",
     "vocab_coverage",
     "winsorized_event_values",
-    # refresh: alphabetically-first round-5-cohort query (44th slot)
+    # refresh: alphabetically-first round-5-cohort query
     "bigram_perplexity",
+    # plans changed when the cross-query LSH/centroid memo was deleted
+    # (each now builds its pair edges, components or centroids from its
+    # own inputs); dedup_cluster_stats, minhash_estimate_error and
+    # semantic_dedup, changed the same way, are in the cohort above
+    "ann_recall_audit",
+    "canonical_best_quality",
+    "clean_corpus",
+    "cluster_medoids",
+    "dedup_components",
+    "dedup_edit_distance",
+    "dedup_kcore",
+    "dedup_label_propagation",
+    "dedup_minhash_lsh",
+    "dedup_triangle_stats",
+    "knn_ivf",
+    "leakage_safe_splits",
+    "silhouette_by_cluster",
 )
 
 

@@ -197,14 +197,12 @@ def knn_ivf(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Approximate top-k: probe the nprobe nearest inverted lists, rank
     exactly within the probed candidates."""
     if queries is None:
         queries = embeddings
-    if centroids is None:
-        centroids = train_centroids(embeddings, n_centroids, id_col=id_col, vec_col=vec_col)
+    centroids = train_centroids(embeddings, n_centroids, id_col=id_col, vec_col=vec_col)
     cand = ivf_assign(
         embeddings.select(
             F.col(id_col).alias("neighbor_id"),

@@ -420,3 +420,39 @@ def test_containment_threshold_is_inclusive(spark):
     docs = spark.createDataFrame([(1, d1), (2, d2)], "doc_id long, text string")
     got = {(r.src, r.dst): r.containment for r in containment_pairs(docs, threshold=0.8).collect()}
     assert got[(1, 2)] == 0.8
+
+
+def test_rerun_sees_appended_document(spark, tmp_path):
+    """A query builds its relations from its inputs on every call: after
+    an exact copy of a document is appended, a rerun in the same session
+    returns what a fresh session returns, not the first run's result."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from p6__mapreduce_spark.queries import QUERIES
+
+    sf = tmp_path / "sf"
+    shutil.copytree("/root/testdata/sf0.001", sf)
+    path = sf / "documents.parquet"
+    path.chmod(0o644)  # the copied test data is read-only
+
+    def rows(session, name):
+        try:
+            return sorted(map(tuple, QUERIES[name](session, str(sf)).collect()))
+        finally:
+            session.catalog.clearCache()
+
+    names = ["dedup_minhash_lsh", "dedup_components"]
+    before = {n: rows(spark, n) for n in names}
+    docs = pq.read_table(path)
+    copy = docs.slice(0, 1).set_column(
+        0, "doc_id", pa.array([max(docs.column("doc_id").to_pylist()) + 1], pa.int64())
+    )
+    pq.write_table(pa.concat_tables([docs, copy]), path)
+    fresh = spark.newSession()
+    for n in names:
+        rerun = rows(spark, n)
+        assert rerun != before[n], n
+        assert rerun == rows(fresh, n), n

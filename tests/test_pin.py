@@ -11,8 +11,6 @@ PKG = os.path.join(os.path.dirname(__file__), "..", "p6__mapreduce_spark")
 # (module, function) pairs allowed to cut lineage with localCheckpoint;
 # each call carries a one-line reason
 CUTS = {
-    # values must outlive the harnesses' per-query clearCache
-    ("queries", "_memo"),
     # the cut freezes spark_partition_id() between two jobs
     ("functions.ranks", "two_phase_rank"),
     ("operators.pipeline", "stable_dense_ids"),
@@ -33,6 +31,9 @@ CUTS = {
     # 17.9 s at sf0.1)
     ("dedup.kcore", "kcore"),
     ("dedup.communities", "label_propagation"),
+    # every wedge branch re-reads the edges (triangles: pin measured
+    # 5.3 -> 19.4 s at sf0.1)
+    ("dedup.triangles", "triangle_stats"),
     # shared relations where pin lost >= 4 of 5 interleaved reps to the
     # cut by more than the cut's IQR (tools/ab_pins.py at sf0.1); the
     # numbers are at each call

@@ -4,10 +4,7 @@
    adjudicates exactly one round-over-round comparison; one that
    outlives its landing round fails HERE until pruned, so a later real
    regression on the same query can never be silently "expected".
-2. VARIANCE_BANDS sha pins (r9 verdict #5): a band is valid only for
-   the byte-identical implementation it was derived on — editing the
-   impl file fails this test until the band is re-derived or removed.
-3. two_phase_rank adversarial orderings (r9 verdict #7): the
+2. two_phase_rank adversarial orderings (r9 verdict #7): the
    distributed rank must equal the single-window model on pre-sorted,
    reverse-sorted, and single-hot-partition inputs — the layouts a
    range-partitioned rank could plausibly get wrong (degenerate
@@ -48,37 +45,6 @@ def test_expected_regressions_entries_not_outlived():
     )
     for e in EXPECTED_REGRESSIONS.values():
         assert isinstance(e["round"], int) and e["reason"]
-
-
-def test_variance_bands_sha_pinned_to_current_impl():
-    """A band derived on one implementation must not adjudicate a
-    different one: the recorded sha12 must match the file on disk."""
-    from bench import VARIANCE_BANDS, _impl_sha12
-
-    for name, band in VARIANCE_BANDS.items():
-        assert band["hi_s"] > 0 and band["reason"], name
-        got = _impl_sha12(band["impl"])
-        assert got == band["impl_sha12"], (
-            f"{name}: impl {band['impl']} changed (sha {got} != pinned "
-            f"{band['impl_sha12']}) — re-derive the variance band or remove it"
-        )
-
-
-def test_variance_band_ignored_when_impl_changes(tmp_path):
-    """The bench-side check is the same sha compare: simulate an
-    edited impl and assert the band would be ignored (mismatch)."""
-    from bench import VARIANCE_BANDS, _impl_sha12
-
-    band = VARIANCE_BANDS["dedup_kcore"]
-    src = open(os.path.join(ROOT, band["impl"])).read()
-    edited = tmp_path / "kcore.py"
-    edited.write_text(src + "\n# edited\n")
-    # _impl_sha12 resolves relative to the repo root, so hash directly
-    import hashlib
-
-    sha = hashlib.sha256(edited.read_bytes()).hexdigest()[:12]
-    assert sha != band["impl_sha12"]
-    assert _impl_sha12(band["impl"]) == band["impl_sha12"]
 
 
 def _rank_model(rows: list[tuple]) -> dict:

@@ -110,15 +110,11 @@ def test_streaming_dedup_state_survives_micro_batches(spark, tmp_path):
 def test_verified_window_spends_all_50_slots_on_oracles():
     """The driver verifies the first 50 registered queries, in
     registration order — the window head must match VERIFIED_WINDOW
-    exactly. r10 policy (COVERAGE.md "Round-10 rotation plan"): with
-    cumulative driver coverage at 275/275 since r9, the window targets
-    FRESHNESS — the six reference-parity pins at the head plus the 44
-    oldest-driver-verified queries under the standing deterministic
-    rule (oldest round first, name-order tie-break; rows-only rows
-    count as driver rows): the entire round-4 cohort (43 queries) plus
-    the alphabetically-first round-5 query (bigram_perplexity). After
-    a green round no registry query's newest driver row is older than
-    r5 — the r9 verdict's done bar."""
+    exactly. Policy: the six reference-parity pins at the head, then
+    refresh slots that cover the queries whose plans changed. The
+    13 queries that stopped reading the deleted cross-query memo rotate
+    in; the 13 name-first members of the round-4 freshness cohort (the
+    oldest non-parity entries) rotate out."""
     from p6__mapreduce_spark.queries import QUERIES, VERIFIED_WINDOW, get_oracle_sql
 
     keys = list(QUERIES)
@@ -127,16 +123,23 @@ def test_verified_window_spends_all_50_slots_on_oracles():
     oracles = get_oracle_sql()
     missing = [k for k in VERIFIED_WINDOW if k not in oracles]
     assert not missing, missing
-    # the freshness cohort (r9 verdict #1): every r4-last-verified query
-    # rotates in this round (spot-check the boundary members)
-    r4_cohort_boundary = {
-        "append_finalized_windows_streaming",  # first by name
-        "winsorized_event_values",  # last by name
-        "tpch_q21_waiting_supplier", "multimodal_decode",
-        "stateful_running_totals", "events_window_sliding",
+    # every former memo consumer is in the window
+    changed = {
+        "dedup_minhash_lsh", "dedup_components", "dedup_cluster_stats",
+        "leakage_safe_splits", "minhash_estimate_error",
+        "canonical_best_quality", "clean_corpus", "dedup_edit_distance",
+        "dedup_triangle_stats", "dedup_label_propagation", "dedup_kcore",
+        "knn_ivf", "semantic_dedup", "cluster_medoids",
+        "silhouette_by_cluster", "ann_recall_audit",
     }
-    assert r4_cohort_boundary <= set(VERIFIED_WINDOW)
-    assert "bigram_perplexity" in VERIFIED_WINDOW  # 44th slot: first r5
+    assert changed <= set(VERIFIED_WINDOW)
+    # eviction boundary: the first and 13th r4 members by name left,
+    # the 14th and the last stayed
+    assert "append_finalized_windows_streaming" not in VERIFIED_WINDOW
+    assert "group_kfold_splits" not in VERIFIED_WINDOW
+    assert "grouping_sets_explicit" in VERIFIED_WINDOW
+    assert "winsorized_event_values" in VERIFIED_WINDOW
+    assert "bigram_perplexity" in VERIFIED_WINDOW
     # pinned mode restored (r7's one-round disjoint assertion flipped
     # back — reference-parity regressions are driver-visible again)
     parity = {
