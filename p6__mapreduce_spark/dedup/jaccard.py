@@ -98,21 +98,24 @@ def ngram_jaccard_pairs(
 
     if candidates is not None and {"n1", "n2"} <= set(candidates.columns):
         # candidates already carry both docs' set sizes (rode the
-        # minhash partial aggregation) — verify needs zero size joins
-        cand = candidates.select("id1", "id2", "n1", "n2").distinct()
+        # minhash partial aggregation) — verify needs zero size joins.
+        # Any further per-pair candidate columns ride to the output.
+        extra = [c for c in candidates.columns if c not in ("id1", "id2", "n1", "n2")]
+        keys = ["id1", "id2", "n1", "n2", *extra]
+        cand = candidates.select(*keys).distinct()
         pa = postings.select(F.col("doc_id").alias("id1"), "shingle")
         pb = postings.select(F.col("doc_id").alias("id2"), "shingle")
         inter = (
             cand.join(pa, "id1")
             .join(pb, ["id2", "shingle"])
-            .groupBy("id1", "id2", "n1", "n2")
+            .groupBy(*keys)
             .agg(F.count(F.lit(1)).alias("n_inter"))
         )
         jac = F.col("n_inter") * F.lit(1.0) / (F.col("n1") + F.col("n2") - F.col("n_inter"))
         return (
             inter.withColumn("jaccard", jac)
             .filter(F.col("jaccard") >= F.lit(threshold))
-            .select("id1", "id2", "jaccard")
+            .select("id1", "id2", "jaccard", *extra)
             .orderBy("id1", "id2")
         )
 

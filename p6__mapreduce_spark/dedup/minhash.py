@@ -82,13 +82,16 @@ def minhash_signatures(
 
 
 def lsh_candidates(
-    signatures: DataFrame, num_bands: int = 16, rows_per_band: int = 2
+    signatures: DataFrame, num_bands: int = 16, rows_per_band: int = 2, *, n_match: bool = False
 ) -> DataFrame:
     """Candidate (id1 < id2) pairs sharing at least one LSH band bucket.
 
     When the signatures carry ``n_shingles`` (they do by default), each
     pair is emitted with both docs' set sizes (``n1``/``n2``) so the
-    exact-Jaccard verify needs no extra size joins.
+    exact-Jaccard verify needs no extra size joins. ``n_match=True``
+    also emits the number of equal signature positions, computed where
+    the band join holds both signatures; the price is that each
+    signature rides the band shuffle once per band.
     """
     bands = F.array(
         *[
@@ -100,14 +103,17 @@ def lsh_candidates(
         ]
     )
     has_sizes = "n_shingles" in signatures.columns
-    size_cols = ["n_shingles"] if has_sizes else []
-    exploded = signatures.select("doc_id", *size_cols, F.explode(bands).alias("b")).select(
-        "doc_id", *size_cols, F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
+    carried = (["n_shingles"] if has_sizes else []) + (["sig"] if n_match else [])
+    exploded = signatures.select("doc_id", *carried, F.explode(bands).alias("b")).select(
+        "doc_id", *carried, F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
     )
     a, b = exploded.alias("a"), exploded.alias("b")
     out_cols = [F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2")]
     if has_sizes:
         out_cols += [F.col("a.n_shingles").alias("n1"), F.col("b.n_shingles").alias("n2")]
+    if n_match:
+        equal = F.zip_with("a.sig", "b.sig", lambda x, y: x == y)
+        out_cols.append(F.size(F.filter(equal, lambda e: e)).alias("n_match"))
     return (
         a.join(
             b,
@@ -126,12 +132,15 @@ def minhash_lsh_pairs(
     k: int = 3,
     num_hashes: int = 32,
     num_bands: int = 16,
+    *,
+    n_match: bool = False,
 ) -> DataFrame:
     """LSH candidate generation + exact-Jaccard verification.
 
     Output = (id1, id2, jaccard >= threshold) over candidates only; with
     the default band geometry this equals the exact pair set (oracle:
     dedup.jaccard.JACCARD_ORACLE_SQL) up to ~1e-7 miss probability.
+    ``n_match=True`` adds each pair's count of equal signature positions.
     """
     rows_per_band = num_hashes // num_bands
     # ONE pinned posting list feeds the signature computation, both
@@ -139,7 +148,7 @@ def minhash_lsh_pairs(
     # four branches of a single action.
     postings = pin(shingle_postings(docs, k))
     sigs = minhash_signatures(docs, k, num_hashes, postings=postings)
-    cands = lsh_candidates(sigs, num_bands, rows_per_band)
+    cands = lsh_candidates(sigs, num_bands, rows_per_band, n_match=n_match)
     return ngram_jaccard_pairs(docs, threshold, k, candidates=cands, postings=postings)
 
 
@@ -218,13 +227,16 @@ def minhash_estimate_vs_exact(
     threshold: float = 0.8,
     k: int = 3,
     num_hashes: int = 32,
-    *,
-    exact_pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """(id1, id2, jaccard, minhash_est, abs_err) over the exact near-dup
-    pair set: the signature-based Jaccard estimate (matching positions /
+    """(id1, id2, jaccard, minhash_est, abs_err) over the near-dup pair
+    set: the signature-based Jaccard estimate (matching positions /
     num_hashes) next to the exact value — the sketch-accuracy audit a
     pipeline runs before trusting estimate-only thresholds at scale.
+
+    The pairs are ``minhash_lsh_pairs``' verified set (the exact set up
+    to its ~1e-7 miss probability), and the matching positions are
+    counted in its band join, so one pinned posting list and one
+    signature build serve the pairs and the estimates.
 
     Every arithmetic step is exact-from-integers (two correctly-rounded
     divisions and one subtraction), and the permutations are plan
@@ -232,22 +244,9 @@ def minhash_estimate_vs_exact(
     reproduces bit-for-bit in the DuckDB oracle
     (``minhash_estimate_oracle_sql``).
     """
-    postings = shingle_postings(docs, k)
-    sigs = minhash_signatures(docs, k, num_hashes, postings=postings).select("doc_id", "sig")
-    # exact_pairs lets callers supply an (id1, id2, jaccard) edge set
-    # (the registry passes the LSH-verified pairs) instead of running
-    # the full inverted-index verification here
-    exact = (
-        exact_pairs
-        if exact_pairs is not None
-        else ngram_jaccard_pairs(docs, threshold, k, postings=postings)
-    )
-    n_match = F.size(F.filter(F.zip_with("s1", "s2", lambda x, y: x == y), lambda b: b))
     est = F.col("n_match") * F.lit(1.0) / F.lit(float(num_hashes))
     return (
-        exact.join(sigs.select(F.col("doc_id").alias("id1"), F.col("sig").alias("s1")), "id1")
-        .join(sigs.select(F.col("doc_id").alias("id2"), F.col("sig").alias("s2")), "id2")
-        .withColumn("n_match", n_match)
+        minhash_lsh_pairs(docs, threshold, k, num_hashes, n_match=True)
         .withColumn("minhash_est", est)
         .withColumn("abs_err", F.abs(F.col("minhash_est") - F.col("jaccard")))
         .select("id1", "id2", "jaccard", "minhash_est", "abs_err")

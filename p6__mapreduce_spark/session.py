@@ -17,6 +17,19 @@ runs, which is new source at any cache size. The batch
 queries (63 classes for wordcount, sort, a join and a stream)
 recompiled nothing at either size. It is a static conf, fixed when
 the JVM starts.
+
+Every Python task runs on ``_worker/pyspark_graft_worker.py``. PySpark's
+worker calls ``importlib.invalidate_caches()`` at the start of every
+task, and each of the 16 zipimporters over ``pyspark.zip`` then
+re-read the archive's directory; the worker module re-reads an archive
+only when its mtime or size has changed. On ``local[4]`` an identity
+``mapInPandas`` over 400k rows in 64 tasks (warm, CPU of the whole
+process tree) fell from 16.7 to 4.0 s of CPU and from 4.3 to 1.2 s of
+wall time: about 0.26 s of CPU per Python task became 0.06 s. Two
+fixed confs select it: ``spark.python.worker.module`` names it, and
+``spark.executorEnv.PYTHONPATH`` puts its directory on the workers'
+path (Spark merges it with the inherited ``PYTHONPATH``). Both are
+SparkContext confs, so they hold for a context ``get_session`` creates.
 """
 
 from __future__ import annotations
@@ -24,6 +37,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
 
 
 def _cpus() -> int:
@@ -54,6 +69,8 @@ def get_session(app_name: str = "p6__mapreduce_spark", *, shuffle_partitions: in
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.worker.module", "pyspark_graft_worker")
+        .config("spark.executorEnv.PYTHONPATH", _WORKER_DIR)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

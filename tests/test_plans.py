@@ -134,6 +134,16 @@ def test_minhash_verify_carries_sizes_no_size_joins(spark):
     assert optimized.count("Join") == 3  # band self-join + 2 verify joins
 
 
+def test_minhash_estimate_shares_the_lsh_build(spark):
+    # the estimate counts matching signature positions in the LSH band
+    # join, so it reads the pinned postings exactly as often as
+    # dedup_minhash_lsh (4); a second posting list and signature build
+    # for the estimate's own signature join read them 6 times
+    lsh = plan_of(QUERIES["dedup_minhash_lsh"](spark, SF))
+    est = plan_of(QUERIES["minhash_estimate_error"](spark, SF))
+    assert est.count("Scan parquet") == lsh.count("Scan parquet") == 4
+
+
 def test_candidate_verify_has_no_broadcast_hint(spark):
     # the candidate set is data-dependent (O(duplicates)); a static
     # broadcast hint could OOM the driver on a high-dup corpus. The plan
