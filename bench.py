@@ -424,7 +424,7 @@ EXPECTED_REGRESSIONS: dict[str, dict] = {
 # cold-run codegen+JIT noise swamps round-over-round deltas: timed 3x,
 # {cold, steady} both reported (r4 verdict "Next round" #8). The set
 # covers the whole family the r4 verdict flagged as "+17-69% drifted":
-# tools/drift_probe.py measured the same queries at ±50% run-to-run
+# the r5 drift probe measured the same queries at ±50% run-to-run
 # on identical pinned plans (knn_ivf 2.7-6.3s within ONE session),
 # with steady-state times consistently at/below the r3 numbers — the
 # drift was single-cold-run measurement noise, not a regression; see

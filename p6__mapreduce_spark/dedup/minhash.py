@@ -18,7 +18,7 @@ probability (1-0.64)^16 ≈ 8e-8, so verified output equals the exact
 Jaccard >= 0.8 pair set (the SQL oracle) with overwhelming probability.
 
 Band geometry vs the corpus similarity distribution (measured in
-tools/scale_probe.py; numbers in SCALE.md): the r=2 default admits a
+SCALE.md, "Measured scale-up"): the r=2 default admits a
 pair with probability 1-(1-s²)^16, which is already ~0.87 at s=0.35 —
 fine when random pairs sit near s≈0.1 (the usual case), but a corpus
 whose typical pairwise similarity approaches the banding knee

@@ -65,7 +65,7 @@ def sorted_neighborhood_pairs(
     # side explodes the w-1 rank offsets and joins on (block, rn+off).
     # An equi-join on block alone with a rank-range predicate
     # materializes b^2 rows per block before the filter — measured
-    # 22x wall at 10x data by tools/scale_probe.py; this shape is
+    # 22x wall at 10x data (SCALE.md, dedup_sorted_neighborhood); this shape is
     # exactly linear (b*(w-1) joined rows per block).
     a = ranked.select(
         F.col("block"),

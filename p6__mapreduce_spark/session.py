@@ -74,16 +74,11 @@ def get_session(app_name: str = "p6__mapreduce_spark", *, shuffle_partitions: in
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # Scan split size. Default 128 MB (Spark's own default, right
-        # for the driver bench and cluster scans); the env override
-        # exists for the scaling probes (tools/scale_gen.py datasets
-        # are single snappy files of a few MB — at 128 MB every corpus
-        # map stage collapses to ONE task and core-count scaling
-        # measurements read ≈1 by construction; r10 verdict item 6).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
-        )
+        # Scan splits stay at Spark's default 128 MB
+        # (spark.sql.files.maxPartitionBytes). A core-scaling run over
+        # tools/scale_gen.py data, whose files are a few MB each, sets
+        # it per session (tools/measure.py cores): the conf is runtime-
+        # modifiable.
         # read TIMESTAMP(NANOS) parquet columns as raw nanos longs
         # (Spark has no nanos timestamp type); readers convert to micros
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -213,10 +213,10 @@ RESOLUTIONS: list[dict] = [
         "match": "Monkeypatching pin.pin_corpus is ineffective",
         "status": "fixed",
         # pin (formerly pin_corpus) dispatches through pin._impl,
-        # which the A/B arms swap; tests/test_pin.py proves a swap
+        # which the pin arms swap; tests/test_pin.py proves a swap
         # reaches queries.py's by-name import
-        "must_match": r"pin\._impl = arm_pin",
-        "must_not_match": r"pin\.pin(_corpus)? = ",
+        "must_match": r'\(pin, "_impl", ',
+        "must_not_match": r'pin\.pin(_corpus)? = |\(pin, "pin',
     },
     {
         "name": "r11-stream-partitions-conf-leak",
@@ -247,8 +247,8 @@ RESOLUTIONS: list[dict] = [
         "status": "fixed",
         # only the harness knows when a query ends: pin.py states the
         # contract, and every harness that runs queries in one session
-        # (bench.py, perfbench/run.py, tools/ab_pins.py,
-        # tools/ab_stream.py, tools/oracle_check.py, tests/test_plans.py)
+        # (bench.py, perfbench/run.py, tools/measure.py,
+        # tools/oracle_check.py, tests/test_plans.py)
         # calls clearCache between queries
         "must_match": r"every harness that runs queries\s+in one session must make that call between queries",
         "must_not_match": None,

@@ -224,9 +224,13 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
     )
 
+    from p6__mapreduce_spark.functions import pin
     from p6__mapreduce_spark.queries import QUERIES
     from p6__mapreduce_spark.session import get_session
 
+    # plan only: skip the pin materialization jobs; persist registers
+    # the cache at call time, so the captured plans are the same
+    pin.PLAN_ONLY = True
     spark = get_session("plan-audit")
     rows = []
     violations = []

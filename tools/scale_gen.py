@@ -106,8 +106,8 @@ def build(src: str, dst: str, n: int) -> None:
         # small row groups so Spark CAN split the file: a single
         # snappy parquet of a few MB with default 122k-row groups
         # gives the scan one task regardless of cores, which poisons
-        # any scaling measurement (pair with
-        # SPARK_GRAFT_MAX_PARTITION_BYTES in session.py)
+        # any scaling measurement (pair with a 1 MB
+        # spark.sql.files.maxPartitionBytes, as tools/measure.py cores sets)
         n_rows = con.sql(f"SELECT COUNT(*) FROM '{s_path}'").fetchone()[0] * n
         rg = max(2048, min(122880, n_rows // 64))
         con.execute(
