@@ -6,64 +6,34 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {...}, "sf": ...}
 
-SINCE r8 the stdout line is a bounded SUMMARY (total, calibration,
-machine/shuffle ratios, regressions, protocol_total, and only the 15
-slowest per-query timings): the full 241-query single-line payload
-overran the driver's stdout tail capture three rounds running
-(BENCH_r05..r07 all landed `parsed: null`), losing the round's
-headline numbers driver-side. The COMPLETE per-query payload is
-written to BENCH_LOCAL_r{N}.json (committed every round — already the
-round-over-round artifact of record, see _previous_round), and the
-summary line carries a "queries_full_in" pointer to it.
+Every query is timed by ``tools/measure.py::timed``: its full result
+goes to the ``noop`` sink, then the session cache is cleared.
+``count()`` is not a substitute, because Catalyst prunes whatever
+``count()`` does not need. One session, warmed by one job, runs each
+query once. A failing query records an ``errors`` entry instead of
+aborting the run. A hanging one is stopped by the watchdog, SIGALRM
+after ``WATCHDOG_S`` and then ``cancelAllJobs``; what began as the
+protocol runner watchdog now guards every query.
 
-Each query is forced with a count() action (no driver-side collect of
-result payloads). A warm-up action runs first so JVM/codegen startup
-isn't attributed to the first query. Every timed query (headline and
-protocol-runner alike) runs inside its own try/except — a single
-failure records an "errors" entry instead of aborting the run, so the
-headline artifact always lands (r7 ADVICE: the protocol runners are
-the flakiest queries in the registry; one hang/failure must not lose
-the round's timings). Protocol runners additionally get a SIGALRM
-watchdog because state-store/micro-batch scheduling can hang, not
-just fail.
+Scope: the whole registry, in registry order. The streaming protocol
+runners are reported apart, under "protocol_runners" and
+"protocol_total", and kept out of the headline total: they stage
+their own file-source streams through the state store across forced
+micro-batches, and their times swing 15-70 s on identical plans
+(BENCH_NOTES_r7.md). ``EXCLUDED`` holds the only untimed queries:
+embedding_neardup_exact is an opt-in O(n^2) baseline (the timed scale
+path is embedding_neardup's LSH bucketing), and on this synthetic
+shared-vocabulary corpus ~10% of all doc pairs lie within hamming 3,
+so dedup_simhash_pairs / dedup_simhash64_pairs measure output
+cardinality, a data property, not the banded plan.
 
-Excluded from the headline set (still available in queries()) — the
-ONLY three exclusions as of r7, each deliberate: embedding_neardup_exact
-(opt-in O(n^2) baseline — the timed scale path is embedding_neardup's
-LSH bucketing) and dedup_simhash_pairs / dedup_simhash64_pairs (this
-synthetic shared-vocabulary corpus puts ~10% of ALL doc pairs within
-hamming 3, so their runtime measures output cardinality — a data
-property — not the banded plan). Everything else in the registry is
-timed every round, including the streaming protocol runners (r7).
-
-If a previous round's bench artifact exists in the repo root, the JSON
-line also carries "prev_total", "delta_total" and a "regressions" map
-(queries >=30% and >=0.3s slower than the previous round) so perf
-regressions are visible in the bench output itself. Each flagged query
-is re-run once and its steady-state time attached ("recheck_steady" +
-"verdict"): the first execution of a query carries 1-1.5s of one-time
-whole-stage-codegen compilation whose run-to-run variance false-flags
-sub-2s queries (root-caused in round 4 — r3's two flagged regressions
-had unchanged pinned plans and steady states at/below their r1 times).
-
-Round-over-round comparison reads BENCH_LOCAL_r{N}.json FIRST (the
-builder's own parsed artifact, written by this script at the end of
-every run) and falls back to the driver's BENCH_r{N}.json only when no
-local artifact exists. Root cause (r4 verdict "What's wrong" #4): the
-driver's r2/r3 artifacts carry `parsed: null` with a truncated stdout
-tail, so `_previous_round` skipped them and silently compared r4
-against ROUND 1, masking genuine r3->r4 drift in the similarity
-family. The local artifact always carries the full queries map, so the
-comparison can never silently fall back more than one round again.
-
-The >=3s iterative heavyweights (STEADY_SET below) are additionally
-run three times — {cold, steady} per query, steady = median of the
-three — because their single cold time carries 1-1.5s of codegen noise
-that makes round-over-round deltas unreadable. The headline total and
-the "queries" map keep COLD times (comparable with all prior rounds);
-"steady" is the extra signal for drift analysis, and regressions on
-the steady set are judged on steady-vs-steady when the previous round
-recorded one.
+stdout carries a bounded summary (``_summary_line``). The complete
+payload is written to BENCH_LOCAL.json, and the copy of that file
+found before it is overwritten is the baseline: the line then carries
+"prev_total", "delta_total", the calibration ratios and a
+"regressions" map (queries >=30% and >=0.3s slower than the
+baseline). Each flagged query is timed once more, warm, and given a
+verdict (``_recheck``).
 """
 
 from __future__ import annotations
@@ -71,319 +41,18 @@ from __future__ import annotations
 import json
 import os
 import re
+import signal
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
-HEADLINE = [
-    # reference parity
-    "wordcount_lines",
-    "wordcount_union",
-    "distinct_sorted",
-    "range_bucket_sort",
-    "mr_facade_wordcount",
-    # analytics
-    "tpch_q1_pricing",
-    "revenue_by_nation",
-    "top_orders_per_customer",
-    "events_window_5m",
-    "events_window_sliding",
-    "user_sessions",
-    "session_funnel",
-    "multi_touch_attribution",
-    "position_attribution",
-    "upsert_latest_snapshot",
-    "snapshot_diff",
-    "incremental_agg_merge",
-    "value_drift_psi",
-    "event_json_stats",
-    "tpch_q5_local_supplier",
-    "tpch_q4_priority_exists",
-    "tpch_q10_returned",
-    "tpch_q14_promo",
-    "tpch_q19_disjunctive",
-    "customer_order_stats",
-    "mode_event_type_per_user",
-    "user_value_sliding_avg",
-    "user_value_trailing_1h",
-    "time_decayed_user_value",
-    "running_value_since_purchase",
-    "ewma_daily_revenue",
-    "event_transition_matrix",
-    "user_event_type_sets",
-    "user_cohort_retention",
-    "kaplan_meier_conversion",
-    "top_event_paths",
-    "deterministic_sample",
-    "session_windows_native",
-    "skewed_event_value_salted",
-    "event_neighbor_counts",
-    "grouping_sets_explicit",
-    "ntile_price_quartiles",
-    "event_span_per_user",
-    "median_price_by_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q18_large_volume",
-    "tpch_q22_idle_rich_customers",
-    "tpch_q7_nation_volume",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity",
-    "tpch_q8_market_share",
-    "tpch_q13_custdist",
-    "tpch_q21_waiting_supplier",
-    "tpch_q12_shipmode",
-    "tpch_q16_supplier_diversity",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q20_promotion_suppliers",
-    "zorder_codes",
-    "skew_profile",
-    "gap_fill_daily",
-    # round-5 additions: bloom prejoin, mergeable grid quantiles,
-    # pagerank, hashing-trick features, PMI collocations, and the
-    # sampled-training (100 TB two-phase) trainer variants
-    "bloom_prejoin_audit",
-    "value_quantile_sketch",
-    "nation_trade_pagerank",
-    "feature_hash_vectors",
-    "ngram_pmi",
-    "kmeans_lloyd_sampled",
-    "pq_codes_sampled",
-    "knn_ivfpq_sampled",
-    "hll_user_audit",
-    "matryoshka_recall_audit",
-    # training-data pipeline passes
-    "repetition_stats",
-    "contamination_check",
-    "corpus_split_counts",
-    "group_kfold_splits",
-    "corpus_mixture_sample",
-    "text_normalize",
-    "doc_chunks",
-    "sequence_packing",
-    "profile_orders",
-    "fk_integrity_profile",
-    "doc_length_histogram",
-    "winsorized_event_values",
-    "sketch_weekly_users",
-    "cms_heavy_hitters",
-    "arrival_burstiness",
-    "order_price_percentiles",
-    "qty_discount_corr",
-    "bootstrap_mean_ci",
-    "lang_source_chisq",
-    "lang_id_confusion",
-    "event_value_mad",
-    "rare_bigram_ratio",
-    "stratified_sample",
-    "weighted_sample_topk",
-    "source_cap_sample",
-    "temperature_mixture",
-    "stable_dense_ids",
-    "bigram_perplexity",
-    "lexicon_hits",
-    "event_props_variant",
-    "udaf_source_gmean",
-    "embedding_dim_stats",
-    "dsir_weights",
-    "dsir_resample_topk",
-    "contrastive_mining",
-    "bpe_learn_merges",
-    "bpe_fertility",
-    "hybrid_search_rrf",
-    # text / dedup / similarity / multimodal
-    "token_stats",
-    "word_freq",
-    "gopher_quality_filters",
-    "gopher_top_ngram_frac",
-    "c4_quality_filters",
-    "zipf_fit",
-    "tfidf_doc_terms",
-    "bm25_scores",
-    "unigram_surprise",
-    "vocab_coverage",
-    "bigram_entropy",
-    "bigram_lm",
-    "doc_fingerprints",
-    "pii_redact",
-    "dedup_exact",
-    "passage_dedup_rewrite",
-    "dup_ngram_coverage",
-    "dedup_ngram_jaccard",
-    "cross_source_dup_matrix",
-    "dedup_rate_by_source",
-    "dedup_prefix_filter",
-    "dedup_minhash_lsh",
-    "minhash_geometry_probe",
-    # runs after dedup_minhash_lsh on purpose: it reuses the same LSH
-    # pair plan, so the shared codegen is already compiled (the order a
-    # real dedup session would run them in anyway)
-    "dedup_components",
-    "dedup_cluster_stats",
-    "leakage_safe_splits",
-    "minhash_estimate_error",
-    "canonical_best_quality",
-    "quality_pct_by_source",
-    "dedup_simhash",
-    "dedup_simhash64",
-    # dedup_simhash64_pairs excluded like dedup_simhash_pairs: the
-    # shared-vocab synthetic corpus makes pair output cardinality (204k
-    # rows at sf0.1), not the banded plan, the thing being timed
-    "dedup_edit_distance",
-    "textrank_keywords",
-    "knn_bruteforce",
-    "knn_lsh",
-    "knn_ivf",
-    "kmeans_lloyd",
-    "pq_codes",
-    "knn_pq",
-    "knn_ivfpq",
-    "ann_recall_audit",
-    "retrieval_mrr_eval",
-    "embedding_neardup",
-    "semantic_dedup",
-    "cluster_medoids",
-    "source_centroid_similarity",
-    "cube_flag_status",
-    "orders_status_pivot",
-    "rollup_orders_by_month",
-    "asof_last_signup",
-    "set_intersect",
-    "set_except",
-    "top100_orders_global",
-    "multimodal_features",
-    "multimodal_frames",
-    "multimodal_decode",
-    "multimodal_audio_decode",
-    "multimodal_video_decode",
-    "multimodal_audio_downsample",
-    "multimodal_resize",
-    # round-5 continuation batch 2
-    "promo_window_event_stats",
-    "dedup_triangle_stats",
-    "kneser_ney_bigram",
-    "theil_sen_daily_revenue",
-    "seasonal_anomaly_daily",
-    "basket_part_pairs",
-    "revenue_gini",
-    "revenue_lorenz_deciles",
-    "dedup_containment",
-    "jl_projection_audit",
-    "pareto_frontier_parts",
-    "ks_purchase_vs_click",
-    "doc_length_lang_auc",
-    "rfm_segments",
-    "orders_merkle_checksum",
-    "benford_price_digits",
-    "cohort_ltv_curve",
-    "orders_unpivot_quarters",
-    "cusum_changepoint_daily",
-    "mann_kendall_trend",
-    "readability_scores",
-    "dedup_label_propagation",
-    "nbayes_source_confusion",
-    "dedup_kcore",
-    "cascade_delete_audit",
-    "ols_daily_trend",
-    "acf_daily_revenue",
-    "target_encode_loo",
-    "nation_trade_hits",
-    "quantile_normalize_tokens",
-    "mmr_diversified_topk",
-    "kcenter_coreset",
-    "silhouette_by_cluster",
-    "retrieval_ndcg_eval",
-    "woe_iv_segments",
-    "wilson_lcb_return_rates",
-    "k_anonymity_audit",
-    "conformal_interval_daily",
-    "filter_funnel_report",
-    # round-5 closing batch
-    "scd2_user_state",
-    "peak_concurrency_daily",
-    "weighted_median_price",
-    "ipw_uplift_by_segment",
-    "cuped_adjusted_lift",
-    "calibration_bins",
-    "jsd_source_unigrams",
-    "dedup_sorted_neighborhood",
-    "markov_next_accuracy",
-    "markov_entropy_rate",
-    "rolling_7d_active_users",
-    "tfidf_cosine_topk",
-    "overdispersion_by_type",
-    "decision_stump_value",
-    "durbin_watson_daily",
-    "char_bigram_entropy",
-    "xcorr_count_value_daily",
-    "wow_revenue_change",
-    "token_budget_pack",
-    "tukey_outlier_fences",
-    # r7 scope widening (r6 verdict gap #6), part 1: the ten
-    # previously unbenched BATCH queries — reference-parity straggler,
-    # text-pipeline singles, TPC-H Q3. Cheap and timing-stable, so
-    # they join the headline total (+~10s at sf0.1; note in
-    # BENCH_NOTES_r7.md).
-    "mr_facade_sort",
-    "tpch_q3_shipping",
-    "lang_id",
-    "quality_score",
-    "bigram_freq",
-    "winnow_fingerprints",
-    "dedup_incremental",
-    "clean_corpus",
-    "brand_volume",
-    "approx_stats",
-    # r8 batch: int8 quantization audit, skip-gram PMI, Spearman rank
-    # correlation, Markov removal-effect attribution
-    "int8_quant_audit",
-    "skipgram_pmi",
-    "spearman_activity_value",
-    "markov_removal_attribution",
-    "kmv_audience_overlap",
-    "wasserstein_purchase_vs_click",
-    "pca_top_component",
-    # r8 continuation batch: smoothing diagnostics, IRLS propensity
-    # fit, PAV calibration, bipartite link prediction, Hilbert codes
-    "good_turing_unigrams",
-    "logreg_quality_irls",
-    "isotonic_calibration",
-    "link_prediction_scores",
-    "hilbert_codes",
-    "als_factorization",
-    "logrank_test_conversion",
-    "phrase_search",
-    # r8 continuation batch 3
-    "mmd_embedding_drift",
-    "roc_curve_points",
-    "apriori_triples",
-    "binseg_changepoints",
-    "lm_greedy_generation",
-    "k_anon_generalization",
-    # r8 continuation batch 4
-    "vocab_growth_curve",
-    "ab_power_mde",
-    "huber_regression_daily",
-]
+import measure  # noqa: E402
 
-# r7 scope widening, part 2: the remaining streaming protocol runners.
-# Each stages its own file-source stream, runs it to completion
-# through the state store across forced micro-batches, and tears it
-# down — measured swings of 15s..70s at the SAME sf on identical
-# pinned plans (state-store checkpoint I/O + many short scheduler
-# rounds amplify box noise; probe data in BENCH_NOTES_r7.md). They are
-# timed EVERY round and reported in the JSON line under
-# "protocol_runners" / "protocol_total", but kept OUT of the headline
-# total so round-over-round regression comparison stays readable.
-# r9 (r8 verdict #4): clicks_full_outer_streaming and
-# foreachbatch_idempotent_upsert — the last two state-store-noise-
-# dominated queries in the headline set, kept there through r8 "for
-# r5/r6 comparability" — moved here with the rest of their family.
-# This is a ONE-TIME comparability break in the headline total
-# (-~21.5s at r8's timings), recorded in BENCH_NOTES_r9.md and
-# self-adjudicated by the expected-regressions ledger below.
+from p6__mapreduce_spark.queries import QUERIES  # noqa: E402
+
 PROTOCOL_RUNNERS = [
     "events_window_streaming",
     "events_dedup_streaming",
@@ -395,87 +64,11 @@ PROTOCOL_RUNNERS = [
     "clicks_full_outer_streaming",
     "foreachbatch_idempotent_upsert",
 ]
+EXCLUDED = ("embedding_neardup_exact", "dedup_simhash_pairs", "dedup_simhash64_pairs")
+HEADLINE = [q for q in QUERIES if q not in PROTOCOL_RUNNERS and q not in EXCLUDED]
 
-# Expected-regressions ledger (r8 verdict #5): when a round
-# DELIBERATELY replaces a query's plan, a round-over-round slowdown on
-# it is the cost of the replacement, not a defect — the verdict should
-# say so machine-readably instead of "investigate" (r8's
-# sketch_weekly_users rewrite showed up as an unadjudicated flag).
-# Each entry is STAMPED with the round the replacement landed in
-# (r9 ADVICE #3): an entry adjudicates exactly the comparison
-# prev_round == round-1 vs round. The round after, the new plan IS the
-# baseline — the verdict path then IGNORES the entry (a real future
-# regression gets the genuine steady-state recheck, never a silent
-# "expected") and the guard test in tests/test_round10_guards.py
-# fails until the stale entry is pruned. Pruned on schedule so far:
-# approx_stats + vocab_growth_curve (landed r9, pruned at the r10
-# open when this stamp mechanism replaced prune-by-convention).
-EXPECTED_REGRESSIONS: dict[str, dict] = {
-    # "query_name": {"round": N, "reason": "plan replacement (rN): ..."},
-    # Pruned on schedule so far: approx_stats + vocab_growth_curve
-    # (landed r9, pruned at the r10 open), the r10 skew-fix pair
-    # (multi_touch/position_attribution) and the ~50-entry r10
-    # scan-audit sweep ledger (pruned at the r11 open — the pinned
-    # plans are the baseline now; guard test went red->green on the
-    # prune, as designed).
-}
-
-# Iterative training / pair-generation / literal-matrix queries whose
-# cold-run codegen+JIT noise swamps round-over-round deltas: timed 3x,
-# {cold, steady} both reported (r4 verdict "Next round" #8). The set
-# covers the whole family the r4 verdict flagged as "+17-69% drifted":
-# the r5 drift probe measured the same queries at ±50% run-to-run
-# on identical pinned plans (knn_ivf 2.7-6.3s within ONE session),
-# with steady-state times consistently at/below the r3 numbers — the
-# drift was single-cold-run measurement noise, not a regression; see
-# BENCH_NOTES_r5.md for the full three-condition probe data.
-STEADY_SET = frozenset(
-    {
-        "knn_pq",
-        "knn_ivfpq",
-        "knn_ivfpq_sampled",
-        "pq_codes",
-        "pq_codes_sampled",
-        "kmeans_lloyd",
-        "kmeans_lloyd_sampled",
-        "dedup_minhash_lsh",
-        "knn_ivf",
-        "cluster_medoids",
-        "knn_lsh",
-        "ann_recall_audit",
-        "embedding_neardup",
-        "semantic_dedup",
-        "dedup_simhash",
-        "minhash_estimate_error",
-        # pair-generation ops over the posting index — same cold-run
-        # codegen noise profile as dedup_minhash_lsh
-        "dedup_containment",
-        "dedup_triangle_stats",
-        # >3.5s cold and variance-prone (r5 verdict #6): the bigram
-        # explode's first-run codegen and the Python-reducer facade's
-        # worker spin-up both need steady-vs-steady deltas
-        "char_bigram_entropy",
-        "mr_facade_wordcount",
-        # r7: the residual investigate flag and its family — iterative
-        # loops of tiny jobs (BPE: ~30 merge rounds; DSIR: bucket-model
-        # aggregates) whose wall is scheduler+shuffle latency; isolated
-        # probes measured 3.6-5.7s on the SAME pinned plan within
-        # minutes (BENCH_NOTES_r7.md), so only steady-vs-steady deltas
-        # are readable
-        "bpe_learn_merges",
-        "dsir_weights",
-        "logreg_quality_irls",
-        "als_factorization",
-        "huber_regression_daily",
-        "dsir_resample_topk",
-        "winnow_fingerprints",
-        # r8: 12 fixed-point rounds of tiny jobs (one localCheckpoint
-        # each) — the bpe/dsir scheduler-latency profile
-        "markov_removal_attribution",
-        # r8: 15 power-iteration rounds, same profile
-        "pca_top_component",
-    }
-)
+WATCHDOG_S = 900
+LOCAL_ARTIFACT = "BENCH_LOCAL.json"
 
 
 def _calibrate(spark) -> dict[str, float]:
@@ -529,192 +122,133 @@ def _calibrate(spark) -> dict[str, float]:
     }
 
 
+def _alarm(signum, frame):  # noqa: ARG001
+    raise TimeoutError(f"watchdog ({WATCHDOG_S}s)")
+
+
+def _time(spark, name: str, sf_dir: str, errors: dict[str, str]) -> float | None:
+    """``measure.timed`` for one registered query under the watchdog.
+    A failure or timeout returns None, records ``errors[name]`` and
+    cancels the query's jobs, so one query cannot lose the run."""
+    old_handler = signal.signal(signal.SIGALRM, _alarm)
+    signal.alarm(WATCHDOG_S)
+    try:
+        return measure.timed(spark, QUERIES[name], sf_dir)
+    except Exception as exc:  # noqa: BLE001 — the artifact must land
+        # repr() of a PySpark-captured JVM error carries no message
+        errors[name] = f"{type(exc).__name__}: {exc}"[:200]
+        spark.sparkContext.cancelAllJobs()
+        return None
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old_handler)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    from p6__mapreduce_spark.queries import QUERIES
-    from p6__mapreduce_spark.session import get_session
-
-    spark = get_session("bench")
-    # warm up JVM codegen AND the parquet reader stack so the first
-    # timed query doesn't pay one-time initialization
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+    spark = measure.session()
     calibration = _calibrate(spark)
-
-    timings: dict[str, float] = {}
-    steady: dict[str, dict[str, float]] = {}
     errors: dict[str, str] = {}
-    for name in HEADLINE:
-        t0 = time.time()
-        try:
-            QUERIES[name](spark, sf_dir).count()
-        except Exception as exc:  # noqa: BLE001 — artifact must land
-            errors[name] = repr(exc)[:200]
-            spark.catalog.clearCache()
-            continue
-        timings[name] = round(time.time() - t0, 3)
-        spark.catalog.clearCache()  # isolate queries: no cross-query cache memory
-        if name in STEADY_SET:
-            runs = [timings[name]]
-            for _ in range(2):
-                t0 = time.time()
-                try:
-                    QUERIES[name](spark, sf_dir).count()
-                except Exception:  # steady sample is optional signal
-                    break
-                runs.append(round(time.time() - t0, 3))
-                spark.catalog.clearCache()
-            steady[name] = {"cold": runs[0], "steady": sorted(runs)[len(runs) // 2]}
+    times = {name: _time(spark, name, sf_dir, errors) for name in HEADLINE + PROTOCOL_RUNNERS}
+    timings = {n: times[n] for n in HEADLINE if times[n] is not None}
+    protocol = {n: times[n] for n in PROTOCOL_RUNNERS}
 
-    # streaming protocol runners: timed every round, reported
-    # separately (not in the headline total — see PROTOCOL_RUNNERS).
-    # Each gets exception isolation AND a watchdog alarm: these stage
-    # their own file-source streams through the state store across
-    # forced micro-batches — the flakiest queries in the registry
-    # (measured 15-70s swings) — and a hang here must not lose the
-    # whole round's timings.
-    import signal
-
-    def _alarm(signum, frame):  # noqa: ARG001
-        raise TimeoutError("protocol runner watchdog (900s)")
-
-    protocol: dict[str, float | None] = {}
-    for name in PROTOCOL_RUNNERS:
-        t0 = time.time()
-        old_handler = signal.signal(signal.SIGALRM, _alarm)
-        signal.alarm(900)
-        try:
-            QUERIES[name](spark, sf_dir).count()
-            protocol[name] = round(time.time() - t0, 3)
-        except Exception as exc:  # noqa: BLE001 — record and continue
-            protocol[name] = None
-            errors[name] = repr(exc)[:200]
-            spark.sparkContext.cancelAllJobs()
-        finally:
-            signal.alarm(0)
-            signal.signal(signal.SIGALRM, old_handler)
-        spark.catalog.clearCache()
-
-    total = round(sum(timings.values()), 3)
     out = {
         "metric": "headline_queries_total_runtime",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "steady": steady,
         "protocol_runners": protocol,
         "protocol_total": round(sum(v for v in protocol.values() if v), 3),
         "calibration": calibration,
         "sf": sf,
     }
+    _compare(ROOT, out)
+    _recheck(spark, sf_dir, out, errors)
     if errors:
         out["errors"] = errors
-    root = os.path.dirname(os.path.abspath(__file__))
-    prev = _previous_round(root)
-    if prev:
-        prev_q = prev.get("queries", {})
-        prev_s = prev.get("steady", {})
-        out["prev_round"] = prev["round"]
-        out["prev_source"] = prev["source"]
-        out["prev_total"] = prev.get("value")
-        # environment-drift factor vs the previous round's recorded
-        # calibration (JVM probe — the one the query timings track);
-        # >1 means this container is slower than last round's
-        prev_cal = prev.get("calibration") or {}
-        if isinstance(prev_cal.get("jvm_hashagg_s"), (int, float)):
-            out["machine_ratio"] = round(
-                calibration["jvm_hashagg_s"] / prev_cal["jvm_hashagg_s"], 3
-            )
-        if isinstance(out["prev_total"], (int, float)):
-            out["delta_total"] = round(total - out["prev_total"], 3)
-
-        def _basis(n: str, t: float) -> tuple[float, float] | None:
-            """(now, prev) on the fairest comparable basis: steady vs
-            steady where both rounds recorded one, else cold vs cold."""
-            if n in steady and isinstance(prev_s.get(n), dict):
-                return steady[n]["steady"], prev_s[n]["steady"]
-            if n in prev_q:
-                return t, prev_q[n]
-            return None
-
-        out["regressions"] = {}
-        for n, t in timings.items():
-            basis = _basis(n, t)
-            if basis is None:
-                continue
-            now_t, prev_t = basis
-            if now_t >= prev_t * 1.3 and now_t - prev_t >= 0.3:
-                out["regressions"][n] = {"prev": prev_t, "now": now_t}
-        # First execution of a query pays one-time whole-stage-codegen
-        # compilation (measured: 1-1.5s run-to-run variance on sub-2s
-        # queries — r3 flagged wordcount_lines 1.33->1.86s while its
-        # steady state is 0.4s with an unchanged, pinned plan). So
-        # re-run each flagged query once and report the steady-state
-        # time: recheck <= prev means first-run noise, not a plan
-        # regression.
-        # drift factor for the verdict: the WORST of the calibration
-        # probes, not just hashagg — r6's same-tree drift hit the
-        # shuffle path (jvm_shuffle_window_s 2.6 -> 3.1 while hashagg
-        # stayed flat), and nearly every registry query shuffles, so
-        # judging rechecks against hashagg alone mislabels pure
-        # shuffle-path box drift as "investigate"
-        drift_ratio = out.get("machine_ratio", 1.0)
-        if isinstance(prev_cal.get("jvm_shuffle_window_s"), (int, float)):
-            shuffle_ratio = round(
-                calibration["jvm_shuffle_window_s"] / prev_cal["jvm_shuffle_window_s"],
-                3,
-            )
-            out["shuffle_ratio"] = shuffle_ratio
-            drift_ratio = max(drift_ratio, shuffle_ratio)
-        for n, entry in out["regressions"].items():
-            exp = EXPECTED_REGRESSIONS.get(n)
-            if exp is not None and exp["round"] == out["prev_round"] + 1:
-                # self-adjudicating ledger entry: THIS round replaced
-                # the plan on purpose — no recheck, no "investigate".
-                # The round stamp scopes the entry to exactly the
-                # old-plan-vs-new-plan comparison (r9 ADVICE #3); an
-                # outlived entry is ignored and the guard test fails
-                # until it is pruned, so a later real regression can
-                # never be silently absorbed as "expected".
-                entry["verdict"] = "expected"
-                entry["expected_reason"] = exp["reason"]
-                continue
-            if exp is not None:
-                entry["stale_expected_entry_round"] = exp["round"]
-            t0 = time.time()
-            QUERIES[n](spark, sf_dir).count()
-            entry["recheck_steady"] = round(time.time() - t0, 3)
-            # r7 ADVICE: record BOTH probe ratios in every verdict
-            # entry, so a reader can see whether the applied
-            # max(hash-agg, shuffle) drift allowance was carried by
-            # the probe that actually matches the query's bound
-            # (documented tradeoff: we don't tag queries shuffle- vs
-            # cpu-bound, we expose the inputs instead)
-            entry["machine_ratio"] = out.get("machine_ratio")
-            entry["shuffle_ratio"] = out.get("shuffle_ratio")
-            if entry["recheck_steady"] <= entry["prev"] * 1.15:
-                entry["verdict"] = "first_run_noise"
-            elif entry["recheck_steady"] <= entry["prev"] * max(drift_ratio, 1.0) * 1.15:
-                # slower than last round, but by no more than the
-                # calibration probes say THIS CONTAINER is slower —
-                # environment drift, not a plan regression
-                entry["verdict"] = "environment_drift"
-            else:
-                entry["verdict"] = "investigate"
-            spark.catalog.clearCache()
-    artifact = _write_local_artifact(root, out)
+    artifact: str | None = os.path.join(ROOT, LOCAL_ARTIFACT)
+    try:
+        with open(artifact, "w") as f:
+            json.dump(out, f, indent=1, sort_keys=True)
+    except OSError:
+        artifact = None  # the summary line still lands
     print(json.dumps(_summary_line(out, artifact)))
+
+
+def _compare(root: str, out: dict) -> None:
+    """Compare ``out`` with the baseline, ``root``'s BENCH_LOCAL.json as
+    the previous run left it; without one, ``out`` is left as it is.
+    Adds "prev_total", "delta_total", the environment-drift factors of
+    the calibration probes against the baseline's (>1 means this
+    container is slower), and the "regressions" map."""
+    try:
+        with open(os.path.join(root, LOCAL_ARTIFACT)) as f:
+            prev = json.load(f)
+    except (OSError, ValueError):
+        return
+    prev_q = prev.get("queries", {})
+    prev_cal = prev.get("calibration") or {}
+    for ratio, probe in (("machine_ratio", "jvm_hashagg_s"), ("shuffle_ratio", "jvm_shuffle_window_s")):
+        if isinstance(prev_cal.get(probe), (int, float)):
+            out[ratio] = round(out["calibration"][probe] / prev_cal[probe], 3)
+    out["prev_total"] = prev.get("value")
+    if isinstance(out["prev_total"], (int, float)):
+        out["delta_total"] = round(out["value"] - out["prev_total"], 3)
+    out["regressions"] = {
+        n: {"prev": prev_q[n], "now": t}
+        for n, t in out["queries"].items()
+        if n in prev_q and t >= prev_q[n] * 1.3 and t - prev_q[n] >= 0.3
+    }
+
+
+def _recheck(spark, sf_dir: str, out: dict, errors: dict[str, str]) -> None:
+    """Re-run each flagged query once and judge its steady-state time.
+
+    The first execution of a query pays one-time whole-stage-codegen
+    compilation (measured: 1-1.5s run-to-run variance on sub-2s
+    queries — r3 flagged wordcount_lines 1.33->1.86s while its steady
+    state is 0.4s with an unchanged, pinned plan), so recheck <= prev
+    means first-run noise, not a plan regression.
+
+    The drift factor is the WORST of the calibration probes, not just
+    hashagg: r6's same-tree drift hit the shuffle path
+    (jvm_shuffle_window_s 2.6 -> 3.1 while hashagg stayed flat), and
+    nearly every registry query shuffles, so judging rechecks against
+    hashagg alone mislabels pure shuffle-path box drift as
+    "investigate"."""
+    drift_ratio = max(out.get("machine_ratio", 1.0), out.get("shuffle_ratio", 1.0), 1.0)
+    for n, entry in out.get("regressions", {}).items():
+        entry["recheck_steady"] = _time(spark, n, sf_dir, errors)
+        # r7 ADVICE: record BOTH probe ratios in every verdict entry, so
+        # a reader can see whether the applied max(hash-agg, shuffle)
+        # drift allowance was carried by the probe that actually
+        # matches the query's bound (documented tradeoff: we don't tag
+        # queries shuffle- vs cpu-bound, we expose the inputs instead)
+        entry["machine_ratio"] = out.get("machine_ratio")
+        entry["shuffle_ratio"] = out.get("shuffle_ratio")
+        if entry["recheck_steady"] is None:
+            entry["verdict"] = "investigate"  # the recheck failed; see errors
+        elif entry["recheck_steady"] <= entry["prev"] * 1.15:
+            entry["verdict"] = "first_run_noise"
+        elif entry["recheck_steady"] <= entry["prev"] * drift_ratio * 1.15:
+            # slower than the baseline, but by no more than the
+            # calibration probes say THIS CONTAINER is slower —
+            # environment drift, not a plan regression
+            entry["verdict"] = "environment_drift"
+        else:
+            entry["verdict"] = "investigate"
 
 
 def _summary_line(out: dict, artifact: str | None) -> dict:
     """The single driver-parseable stdout line (r7 verdict #2): every
     scalar signal, the regressions map, and only the 15 slowest
     per-query timings — bounded at ~1.5 KB so no stdout tail capture
-    can truncate it mid-object. The full queries/steady/protocol maps
-    live in the committed local artifact named by "queries_full_in"."""
+    can truncate it mid-object. The full queries/protocol maps
+    live in the local artifact named by "queries_full_in"."""
     keep = (
         "metric",
         "value",
@@ -722,8 +256,6 @@ def _summary_line(out: dict, artifact: str | None) -> dict:
         "sf",
         "calibration",
         "protocol_total",
-        "prev_round",
-        "prev_source",
         "prev_total",
         "delta_total",
         "machine_ratio",
@@ -733,7 +265,7 @@ def _summary_line(out: dict, artifact: str | None) -> dict:
     summary = {k: out[k] for k in keep if k in out}
     # The regressions block must not unbound the line: a noisy session
     # can flag 30+ queries, and each full entry carries recheck + both
-    # probe ratios + ledger reasons (~180 bytes) — a real r9 run hit
+    # probe ratios (~180 bytes) — a real r9 run hit
     # 6.4 KB, past the 4 KB tail-capture bound. The summary carries a
     # COMPACT verdict per flagged query ({prev, now, verdict}, the 12
     # worst by absolute slowdown); every full entry stays in the local
@@ -760,71 +292,6 @@ def _summary_line(out: dict, artifact: str | None) -> dict:
     if artifact is not None:
         summary["queries_full_in"] = os.path.basename(artifact)
     return summary
-
-
-def _write_local_artifact(root: str, out: dict) -> str | None:
-    """Persist this run's FULL parsed payload as BENCH_LOCAL_r{N}.json
-    (N = current round = latest driver BENCH_r*.json + 1, or 1).
-    Committed each round, it guarantees `_previous_round` always finds
-    a complete previous-round queries map even when the driver's own
-    artifact is truncated (`parsed: null` — the r2/r3 failure mode that
-    made r4 silently compare against r1)."""
-    import glob
-
-    latest = 0
-    for path in glob.glob(os.path.join(root, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m:
-            latest = max(latest, int(m.group(1)))
-    dst = os.path.join(root, f"BENCH_LOCAL_r{latest + 1}.json")
-    try:
-        with open(dst, "w") as f:
-            json.dump(out, f, indent=1, sort_keys=True)
-    except OSError:
-        return None  # summary on stdout still lands
-    return dst
-
-
-def _previous_round(root: str) -> dict | None:
-    """Latest usable bench payload, tagged with its round and source.
-
-    BENCH_LOCAL_r{N}.json (builder-written, always a full queries map)
-    outranks the driver's BENCH_r{N}.json at the same round; across
-    rounds the highest round with a parseable queries map wins. The
-    current in-progress round's own local artifact (written by a prior
-    bench invocation THIS round, i.e. newer than every driver BENCH_r*)
-    is excluded — comparisons are round-over-round, not run-over-run."""
-    import glob
-
-    latest_driver = 0
-    for path in glob.glob(os.path.join(root, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m:
-            latest_driver = max(latest_driver, int(m.group(1)))
-
-    # (round, priority, payload): priority 1 = local artifact, 0 = driver
-    best: tuple[int, int, dict] | None = None
-    for pattern, prio in (("BENCH_LOCAL_r*.json", 1), ("BENCH_r*.json", 0)):
-        for path in glob.glob(os.path.join(root, pattern)):
-            m = re.search(r"BENCH(?:_LOCAL)?_r(\d+)\.json$", path)
-            if not m:
-                continue
-            n = int(m.group(1))
-            if prio == 1 and n > latest_driver:
-                continue  # this round's own earlier run — not a previous round
-            try:
-                with open(path) as f:
-                    data = json.load(f)
-                parsed = data.get("parsed") or data
-                if "queries" not in parsed:
-                    continue
-            except (OSError, json.JSONDecodeError):
-                continue
-            if best is None or (n, prio) > (best[0], best[1]):
-                best = (n, prio, parsed)
-    if best is None:
-        return None
-    return {"round": best[0], "source": "local" if best[1] else "driver", **best[2]}
 
 
 if __name__ == "__main__":

@@ -37,13 +37,13 @@ Lifetime: a pin lives until the harness that runs the query calls
 harness knows when a query ends, so every harness that runs queries
 in one session must make that call between queries.
 
-``PLAN_ONLY`` (set by plan-audit tools that build queries merely to
-read ``explain`` output — tools/scan_audit.py, tools/capture_plans.py
-for *before* captures) skips the materialization job at construction
-time. It does NOT change the captured plan: ``persist`` registers the
-cache with the CacheManager at call time, so the physical plan shows
-the same ``InMemoryTableScan`` nodes whether or not the cache has been
-materialized yet.
+``PLAN_ONLY`` (set by the plan-only tools that build queries merely
+to read ``explain`` output: tools/plan_audit.py, tools/scan_audit.py
+and tools/capture_plans.py) skips the materialization job at
+construction time. It does NOT change the captured plan: ``persist``
+registers the cache with the CacheManager at call time, so the
+physical plan shows the same ``InMemoryTableScan`` nodes whether or
+not the cache has been materialized yet.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
-"""tools/measure.py times the full result, and tools/ab_pins.py notices
-an arm that a query never reaches."""
+"""tools/measure.py times the full result, bench.py times through it,
+and tools/ab_pins.py notices an arm that a query never reaches."""
 
 import os
 import sys
@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 import ab_pins  # noqa: E402
+import bench  # noqa: E402
 import measure  # noqa: E402
 
 from tests.test_plans import SF  # noqa: E402
@@ -17,7 +18,7 @@ from tests.test_plans import SF  # noqa: E402
 needs_data = pytest.mark.skipif(not os.path.isdir(SF), reason="testdata absent")
 
 
-def test_timed_forces_the_full_result(spark):
+def test_timed_forces_the_full_result(spark, monkeypatch):
     def boom(spark_, _sf_dir):
         return spark_.range(3).select("id", F.raise_error(F.lit("boom")).alias("err"))
 
@@ -25,6 +26,12 @@ def test_timed_forces_the_full_result(spark):
     assert boom(spark, SF).count() == 3
     with pytest.raises(Exception, match="boom"):
         measure.timed(spark, boom, SF)
+
+    # bench.py's timing loop goes through timed: an error, and no time
+    monkeypatch.setitem(bench.QUERIES, "boom", boom)
+    errors: dict[str, str] = {}
+    assert bench._time(spark, "boom", SF, errors) is None
+    assert "boom" in errors["boom"]
 
 
 @needs_data

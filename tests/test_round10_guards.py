@@ -1,50 +1,11 @@
-"""Round-10 guard pins.
-
-1. EXPECTED_REGRESSIONS round stamps (r9 ADVICE #3): an entry
-   adjudicates exactly one round-over-round comparison; one that
-   outlives its landing round fails HERE until pruned, so a later real
-   regression on the same query can never be silently "expected".
-2. two_phase_rank adversarial orderings (r9 verdict #7): the
-   distributed rank must equal the single-window model on pre-sorted,
-   reverse-sorted, and single-hot-partition inputs — the layouts a
-   range-partitioned rank could plausibly get wrong (degenerate
-   sampled boundaries, all rows in one range).
+"""Round-10 guard pin: two_phase_rank adversarial orderings (r9
+verdict #7). The distributed rank must equal the single-window model
+on pre-sorted, reverse-sorted, and single-hot-partition inputs — the
+layouts a range-partitioned rank could plausibly get wrong (degenerate
+sampled boundaries, all rows in one range).
 """
 
 from __future__ import annotations
-
-import glob
-import os
-import re
-
-ROOT = os.path.join(os.path.dirname(__file__), "..")
-
-
-def _latest_driver_round() -> int:
-    latest = 0
-    for path in glob.glob(os.path.join(ROOT, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m:
-            latest = max(latest, int(m.group(1)))
-    return latest
-
-
-def test_expected_regressions_entries_not_outlived():
-    """Every ledger entry must stamp the CURRENT round (latest driver
-    artifact + 1). The round after a plan replacement lands, its entry
-    is stale — the new plan is the baseline — and must be pruned."""
-    from bench import EXPECTED_REGRESSIONS
-
-    current = _latest_driver_round() + 1
-    stale = {
-        n: e["round"] for n, e in EXPECTED_REGRESSIONS.items() if e["round"] != current
-    }
-    assert not stale, (
-        f"EXPECTED_REGRESSIONS entries outlived their round (current r{current}): "
-        f"{stale} — prune them; the replaced plan is the baseline now"
-    )
-    for e in EXPECTED_REGRESSIONS.values():
-        assert isinstance(e["round"], int) and e["reason"]
 
 
 def _rank_model(rows: list[tuple]) -> dict:

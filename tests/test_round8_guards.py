@@ -1,7 +1,7 @@
 """Round-8 guards: the upsert runner's bounded temp dirs, bench.py's
-driver-parseable summary line, and the winnow prefix-hash rewrite's
-value identity against a direct Python model of the ORIGINAL
-per-substring fold."""
+driver-parseable summary line and its baseline, and the winnow
+prefix-hash rewrite's value identity against a direct Python model of
+the ORIGINAL per-substring fold."""
 
 import json
 import os
@@ -93,6 +93,35 @@ def test_bench_summary_line_is_bounded_and_complete():
     assert min(s["queries"].values()) >= 226.0
     # full per-query maps are NOT on the line
     assert "steady" not in s and "protocol_runners" not in s
+
+
+def test_bench_baseline_is_the_previous_bench_local(tmp_path):
+    """The baseline is BENCH_LOCAL.json as the previous run left it;
+    per-round BENCH_r*/BENCH_LOCAL_r* files beside it are history and
+    never read."""
+    from bench import _compare
+
+    cal = {"py_sha256_s": 0.1, "jvm_hashagg_s": 1.0, "jvm_shuffle_window_s": 2.0}
+
+    def run():
+        out = {"value": 12.0, "queries": {"a": 2.0, "b": 10.0}, "calibration": cal}
+        _compare(str(tmp_path), out)
+        return out
+
+    assert "prev_total" not in run()
+
+    old = {"value": 1.0, "queries": {"a": 0.1, "b": 0.1}, "calibration": cal}
+    for name in ("BENCH_r11.json", "BENCH_LOCAL_r12.json"):
+        (tmp_path / name).write_text(json.dumps(old))
+    assert "prev_total" not in run()
+
+    prev = {"value": 11.0, "queries": {"a": 1.0, "b": 10.0},
+            "calibration": {**cal, "jvm_shuffle_window_s": 1.0}}
+    (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps(prev))
+    out = run()
+    assert out["prev_total"] == 11.0 and out["delta_total"] == 1.0
+    assert out["machine_ratio"] == 1.0 and out["shuffle_ratio"] == 2.0
+    assert out["regressions"] == {"a": {"prev": 1.0, "now": 2.0}}
 
 
 def _py_poly(s: str, base=31, mod=2147483647) -> int:

@@ -153,17 +153,6 @@ RESOLUTIONS: list[dict] = [
         "must_not_match": None,
     },
     {
-        "name": "r9-expected-regressions-no-round-stamp",
-        "file": "bench.py",
-        "match": "keyed by query name with no round stamp",
-        "status": "fixed",
-        # entries are round-stamped dicts; the verdict path ignores an
-        # outlived entry (tagging stale_expected_entry_round) and the
-        # guard test fails until it is pruned
-        "must_match": r"stale_expected_entry_round",
-        "must_not_match": r"EXPECTED_REGRESSIONS: dict\[str, str\]",
-    },
-    {
         "name": "r10-corpus-sized-localcheckpoint-pins",
         "file": "p6__mapreduce_spark/dedup/substring.py",
         "match": "extends eager localCheckpoint pinning from bounded aggregates to corpus-sized relations",
