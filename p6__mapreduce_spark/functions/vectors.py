@@ -1,11 +1,12 @@
 """Vector expressions over array<float|double> embedding columns.
 
-``zip_with`` + ``aggregate`` keep the arithmetic inside whole-stage
-codegen (no Python, no UDF) — the right shape for brute-force similarity
-over billions of rows: the scan stays columnar and the only shuffle is
-whatever the caller's join/topk needs. All math is done in float64 after
-an explicit cast so results are bit-reproducible against the DuckDB
-oracle (``list_inner_product(a::DOUBLE[], b::DOUBLE[])``).
+``zip_with`` + ``aggregate`` keep the arithmetic in the JVM (no Python,
+no UDF): the scan stays columnar and the only shuffle is whatever the
+caller's join/topk needs. They are not code-generated: Spark evaluates
+these higher-order functions interpreted (``CodegenFallback``), per row
+and per element, so their cost grows with rows × dimensions. All math
+is done in float64 after an explicit cast so results are
+bit-reproducible against the DuckDB oracle (``list_inner_product(a::DOUBLE[], b::DOUBLE[])``).
 """
 
 from __future__ import annotations

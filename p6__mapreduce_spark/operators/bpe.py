@@ -1,26 +1,26 @@
-"""Distributed BPE merge learning (byte-pair encoding vocabulary).
+"""BPE merge learning (byte-pair encoding vocabulary).
 
 The tokenizer-training half of an LLM data pipeline: learn the first K
 BPE merges from corpus word frequencies (Sennrich et al. 2016). The
-scale structure is the important part:
+scale structure is the reference's wordcount followed by a loop over
+its reduced output:
 
 - The 100 TB corpus is scanned ONCE, collapsing to the word-frequency
   vocabulary (groupBy word, map-side partial counts — the same shrink
-  the reference's wordcount performs). Every subsequent iteration runs
-  on the vocab aggregate, whose size is bounded by |distinct words|,
-  not by corpus bytes.
-- Each round is one weighted pair-count aggregation (explode adjacent
-  symbol pairs, SUM(word_count)) plus a deterministic global argmax
-  (exact integer counts; ties break lexicographically), then a
-  map-side fold that merges the chosen pair inside each word's symbol
-  array (leftmost-first, non-overlapping — the BPE contract).
-- The argmax is the ONLY driver round-trip per merge (one row), the
-  same shape as Lloyd iterations in similarity/kmeans; vocab state is
-  localCheckpoint-truncated so round R's plan does not replay rounds
-  1..R-1.
-- The merge table handed back to Spark is an Arrow-backed local frame
-  (functions/frames.py): it is built in the JVM, so ordering and
-  writing it runs no Python worker.
+  the reference's wordcount performs). That is the only Spark job of
+  training; its |vocab| rows are collected to the driver, as the
+  reference's client reads its reduced output.
+- The greedy merge loop runs on the driver over that vocabulary: each
+  round is a weighted pair count (SUM of word counts per adjacent
+  symbol pair), a deterministic argmax (exact integer counts; ties
+  break by (lhs, rhs)), then a leftmost-first, non-overlapping merge
+  of the chosen pair inside every word — the BPE contract. The driver
+  holds |vocab| rows and the loop costs O(K·Σ|word|) over the distinct
+  words, independent of corpus bytes; no round plans or runs a job.
+- The merge table and the per-word piece counts go back to Spark as
+  Arrow-backed local frames (functions/frames.py): built in the JVM,
+  so ordering, writing or broadcast-joining them runs no Python
+  worker.
 
 The result (the merge table itself) is deterministic, so the DuckDB
 oracle reproduces the whole iteration as K chained CTE stages — pair
@@ -30,96 +30,61 @@ smuggled from the Spark run.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from collections import Counter
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from p6__mapreduce_spark.functions.frames import local_frame
 from p6__mapreduce_spark.functions.text import tokens_expr
 
 
-def _merge_fold(syms: Column | str, left: str, right: str) -> Column:
-    """Merge adjacent (left, right) symbol pairs, leftmost-first,
-    non-overlapping: fold symbols into an accumulator, replacing the
-    accumulator's tail when it is `left` and the incoming symbol is
-    `right` (a just-formed merge can never be the left half of another
-    merge in the same round — the BPE contract)."""
-    c = F.col(syms) if isinstance(syms, str) else syms
-    return F.aggregate(
-        c,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (x == F.lit(right)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(left + right))
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def word_vocab(docs: DataFrame) -> DataFrame:
-    """(word, n, syms): corpus word frequencies with initial
-    character-level symbol arrays — the one corpus-sized job."""
-    return (
-        docs.select(F.explode(tokens_expr("text")).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "word",
-            "n",
-            F.filter(F.split("word", ""), lambda ch: ch != F.lit("")).alias("syms"),
-        )
-    )
+def _merge_pair(syms: list[str], lhs: str, rhs: str) -> list[str]:
+    """Merge adjacent (lhs, rhs) pairs, leftmost-first, non-overlapping:
+    a just-formed merge is never the left half of another merge in the
+    same round, so ``aaa`` under (a, a) becomes [aa, a]."""
+    out: list[str] = []
+    i = 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == lhs and syms[i + 1] == rhs:
+            out.append(lhs + rhs)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
 
 
 def _train(
     docs: DataFrame, num_merges: int
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """Run the merge-learning iteration; returns (merge list, final
-    vocab state with fully-merged symbol arrays).
+) -> tuple[list[tuple[int, str, str, int]], dict[str, list[str]]]:
+    """Learn the merges; returns (merge list, word -> fully-merged
+    symbols).
 
-    Job-shape note (r11, guide §2.6): deferring the per-round vocab
-    checkpoint behind a lazy fold chain (re-checkpoint every 4 rounds,
-    halving per-round job count) was implemented, verified
-    merge-identical, and measured 2.17 -> 2.25 s at sf0.1 — the
-    chained folds' re-evaluation plus deeper per-round expressions
-    cost MORE than the saved checkpoint job, so the per-round eager
-    checkpoint stays (it is also what bounds plan depth at any
-    num_merges)."""
-    vocab = word_vocab(docs).localCheckpoint(eager=True)  # cut: loop-carried merge state
+    One Spark job aggregates the corpus to (word, n) and collects it;
+    the rounds run in plain Python over those |vocab| rows. Tokens are
+    ``[a-z0-9]+``, so Python's code-point order on the symbols is
+    Spark's and DuckDB's byte order, and ``list(word)`` is the
+    oracle's ``string_split(word, '')``."""
+    rows = (
+        docs.select(F.explode(tokens_expr("text")).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    counts = {r.word: r.n for r in rows}
+    vocab = {w: list(w) for w in counts}
     merges: list[tuple[int, str, str, int]] = []
     for i in range(num_merges):
-        # sequence(1, 0) would be DESCENDING in Spark, so single-symbol
-        # words must produce an explicitly empty pair array
-        pair_arr = F.when(
-            F.size("syms") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("syms") - 1),
-                lambda j: F.struct(
-                    F.element_at("syms", j).alias("lhs"),
-                    F.element_at("syms", j + 1).alias("rhs"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<lhs:string,rhs:string>>"))
-        pairs = vocab.select("n", F.posexplode(pair_arr).alias("_p", "pair"))
-        top = (
-            pairs.groupBy(
-                F.col("pair").getField("lhs").alias("lhs"),
-                F.col("pair").getField("rhs").alias("rhs"),
-            )
-            .agg(F.sum("n").alias("c"))
-            .orderBy(F.desc("c"), "lhs", "rhs")
-            .limit(1)
-            .collect()
-        )
-        if not top:
+        pairs: Counter[tuple[str, str]] = Counter()
+        for w, syms in vocab.items():
+            for pair in zip(syms, syms[1:]):
+                pairs[pair] += counts[w]
+        if not pairs:
             break
-        lhs, rhs, c = top[0].lhs, top[0].rhs, int(top[0].c)
+        (lhs, rhs), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append((i, lhs, rhs, c))
-        vocab = vocab.select(
-            "word", "n", _merge_fold("syms", lhs, rhs).alias("syms")
-        ).localCheckpoint(eager=True)  # cut: rebuilt every merge round
+        vocab = {w: _merge_pair(syms, lhs, rhs) for w, syms in vocab.items()}
     return merges, vocab
 
 
@@ -143,14 +108,17 @@ def bpe_encode_stats(
     counts — fertility (pieces per word) is the standard tokenizer-fit
     diagnostic a curation pipeline thresholds on.
 
-    Scale shape: the fold runs once per DISTINCT word (the final vocab
-    state falls out of training for free); documents then join their
-    exploded words to the word -> piece-count table — bounded by
-    |vocab|, so Catalyst broadcasts it — and aggregate per doc. The
-    100 TB corpus is touched by exactly two jobs (the vocab build and
-    this count join), never by the per-round iteration."""
+    Scale shape: training leaves every distinct word's merged symbols
+    on the driver; documents then join their exploded words to that
+    word -> piece-count table — bounded by |vocab|, so it is broadcast
+    — and aggregate per doc. The corpus is touched by exactly two jobs
+    (the vocab build and this count join)."""
     _, vocab = _train(docs, num_merges)
-    pieces = vocab.select("word", F.size("syms").cast("long").alias("pieces"))
+    pieces = local_frame(
+        spark,
+        [(w, len(syms)) for w, syms in vocab.items()],
+        "word string, pieces long",
+    )
     words = docs.select(
         "doc_id", F.explode(tokens_expr("text")).alias("word")
     )

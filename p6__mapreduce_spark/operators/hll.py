@@ -12,8 +12,9 @@ denominator Z = Σ 2^-r is carried as the exact int64 numerator
 S = Σ 2^(24-r) (common denominator 2^24) — so the WHOLE sketch *and*
 the raw estimate (one fixed-shape double expression over S) replay
 bit-for-bit in DuckDB. The trick that keeps it exact: rho (leading-
-zero rank) is computed as 24 - bit_length(v) with bit_length as a
-count over a powers-of-two literal — no log2, no libm anywhere.
+zero rank) is computed as 24 - bit_length(v) with bit_length exact in
+integers (Spark: the length of ``bin(v)``; DuckDB: a count over a
+powers-of-two literal) — no log2, no libm anywhere.
 
 The sketch is the standard mergeable shape: registers combine by MAX,
 so per-day registers roll up to month/all-time without rescanning —
@@ -54,10 +55,11 @@ def _mix32(col: Column) -> Column:
 
 def _rho_expr(v: Column, vbits: int = VBITS) -> Column:
     """1 + leading zeros of the ``vbits``-bit value = vbits+1 -
-    bit_length(v), bit_length counted against a powers-of-two literal
-    (exact, no log2): v = 0 gives the maximal rho vbits+1."""
-    powers = F.lit([1 << i for i in range(vbits)])
-    bitlen = F.size(F.filter(powers, lambda p: p <= v))
+    bit_length(v), bit_length read as the length of v's binary digit
+    string (exact, no log2, and code-generated where a lambda over a
+    powers-of-two literal is interpreted per row): v = 0 gives the
+    maximal rho vbits+1."""
+    bitlen = F.when(v == F.lit(0), F.lit(0)).otherwise(F.length(F.bin(v)))
     return F.lit(vbits + 1) - bitlen
 
 
@@ -354,8 +356,8 @@ def approx_stats_portable(lineitem: DataFrame) -> DataFrame:
     estimator replayable bit-for-bit in DuckDB.
 
     - ``approx_orders`` / ``approx_parts``: the m=1024 portable HLL of
-      ``weekly_users_sketch_rollup`` (lowbias32 mixer, rho via a
-      powers-of-two count, exact integer harmonic numerator,
+      ``weekly_users_sketch_rollup`` (lowbias32 mixer, rho via an
+      exact integer bit length, exact integer harmonic numerator,
       linear-counting small-range branch through the embedded integer
       ln table), rounded to BIGINT with floor(est + 0.5) — identical
       doubles in, identical longs out. Both key columns ride ONE

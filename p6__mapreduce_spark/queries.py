@@ -4558,13 +4558,14 @@ def _bpe_oracle() -> str:
 @register("bpe_learn_merges", oracle=_bpe_oracle())
 def q_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer training: the first 8 BPE merges learned from corpus
-    word frequencies (Sennrich et al. 2016). Corpus scanned ONCE into
-    the word-frequency vocab; each merge round is one pair-count
-    aggregation over the vocab aggregate + a 1-row argmax round-trip
-    (exact integer counts, lexicographic tie-break), so the iteration
-    cost is bounded by |vocab|, never corpus bytes. The DuckDB oracle
-    replays the full iteration as chained CTE stages with NO literals
-    from the Spark run (operators/bpe.py)."""
+    word frequencies (Sennrich et al. 2016). One Spark job scans the
+    corpus into the word-frequency vocab and collects it; the merge
+    rounds (weighted pair count, exact integer argmax with
+    lexicographic tie-break, leftmost-first fold) run on the driver
+    over those |vocab| rows, so the iteration cost is bounded by
+    |vocab|, never corpus bytes. The DuckDB oracle replays the full
+    iteration as chained CTE stages with NO literals from the Spark
+    run (operators/bpe.py)."""
     from p6__mapreduce_spark.operators.bpe import bpe_learn_merges
 
     return bpe_learn_merges(spark, load_table(spark, sf_dir, "documents"), num_merges=8)
@@ -4581,9 +4582,10 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fit: encode the corpus with the 8 merges just learned
     from it and report per-document subword counts + fertility (pieces
     per word) — the diagnostic a curation pipeline thresholds on. The
-    fold runs once per DISTINCT word (final vocab state falls out of
-    training); documents only explode words and broadcast-join the
-    piece-count table (operators/bpe.py)."""
+    merges fold once per DISTINCT word on the driver (the final vocab
+    state falls out of training); documents only explode words and
+    broadcast-join the |vocab|-row piece-count table
+    (operators/bpe.py)."""
     from p6__mapreduce_spark.operators.bpe import bpe_encode_stats
 
     return bpe_encode_stats(spark, load_table(spark, sf_dir, "documents"), num_merges=8)
@@ -5347,8 +5349,12 @@ def q_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(2147483648)
         ).alias("u"),
     )
-    thresholds = F.lit(_poisson_cdf_thresholds())
-    w = F.size(F.filter(thresholds, lambda t: t < F.col("u"))).cast("long")
+    # w = #(thresholds < u), one CASE term per literal threshold: a
+    # filter lambda over the threshold array is interpreted per draw
+    w = sum(
+        F.when(F.lit(t) < F.col("u"), F.lit(1)).otherwise(F.lit(0))
+        for t in _poisson_cdf_thresholds()
+    ).cast("long")
     replicas = (
         draws.select("b", "cents", w.alias("w"))
         .groupBy("b")
@@ -6581,7 +6587,7 @@ def _hll_oracle() -> str:
 @register("hll_user_audit", oracle=_hll_oracle())
 def q_hll_user_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable HyperLogLog with an EXACT oracle: 256 registers from a
-    lowbias32 avalanche mixer, rho via a powers-of-two count (no
+    lowbias32 avalanche mixer, rho via an exact integer bit length (no
     log2), harmonic denominator carried as an exact int64 numerator —
     the register array AND the raw estimate replay bit-for-bit in
     DuckDB (Spark's own HLL++ can only get a rows-only check). Exact
@@ -9433,11 +9439,14 @@ def q_huber_regression_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The registry STAYS FROZEN at 275 for round 10 (r9 verdict #1: frozen
 # until the histogram's tail reaches <= 3 rounds; after a green r10
 # the tail is r5 = 5 rounds, so no registrations this round either).
-# Later rotation: the window covers what changed. The 13 queries whose
+# Later rotations: the window covers what changed. The 13 queries whose
 # plans changed when the cross-query memo was deleted replace the 13
 # name-first unchanged members of the round-4 cohort (all 44 refresh
 # entries were last driver-verified in the same round, so the cohort
-# order and name order decide).
+# order and name order decide). Then the 6 queries whose plans changed
+# when BPE training moved onto the driver and the HLL rho and bootstrap
+# weight lost their per-row lambdas replace the next 6 name-first
+# unchanged cohort members; the memo consumers stay.
 VERIFIED_WINDOW: tuple[str, ...] = (
     # reference parity (SURVEY.md §2) — pinned every round
     "wordcount_lines",
@@ -9447,16 +9456,10 @@ VERIFIED_WINDOW: tuple[str, ...] = (
     "mr_facade_wordcount",
     "mr_facade_sort",
     # refresh: the round-4 cohort (last driver row = r4, name order)
-    # minus its 13 name-first members whose plans did not change,
-    # evicted for the group at the end
+    # minus its 19 name-first members whose plans did not change,
+    # evicted for the two groups at the end
     "dedup_cluster_stats",
-    "grouping_sets_explicit",
-    "median_price_by_priority",
     "minhash_estimate_error",
-    "minhash_geometry_probe",
-    "multimodal_decode",
-    "multimodal_frames",
-    "multimodal_resize",
     "ntile_price_quartiles",
     "order_price_percentiles",
     "passage_dedup_rewrite",
@@ -9498,6 +9501,14 @@ VERIFIED_WINDOW: tuple[str, ...] = (
     "knn_ivf",
     "leakage_safe_splits",
     "silhouette_by_cluster",
+    # plans changed when BPE training moved onto the driver and the HLL
+    # rho and the bootstrap weight dropped their per-row lambdas
+    "approx_stats",
+    "bootstrap_mean_ci",
+    "bpe_fertility",
+    "bpe_learn_merges",
+    "hll_user_audit",
+    "sketch_weekly_users",
 )
 
 

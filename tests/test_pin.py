@@ -15,7 +15,6 @@ CUTS = {
     ("functions.ranks", "two_phase_rank"),
     ("operators.pipeline", "stable_dense_ids"),
     # loop-carried or per-round state of a driver loop
-    ("operators.bpe", "_train"),
     ("operators.logreg", "logreg_quality_irls"),
     ("operators.robust", "huber_regression_daily"),
     ("dedup.components", "connected_components"),

@@ -410,6 +410,16 @@ def test_r6_two_phase_window_rewrites(spark):
     assert pf.count("Exchange SinglePartition") == 1, pf
 
 
+@pytest.mark.parametrize("name", ["approx_stats", "bootstrap_mean_ci"])
+def test_per_row_hot_expressions_carry_no_lambda(spark, name):
+    """Spark evaluates higher-order functions (``filter``, ``transform``,
+    ``aggregate`` ...) interpreted, per row; on these queries' million-
+    row relations a lambda over a literal array made the full result
+    16-25x slower at sf0.1. Their optimized plans must carry none."""
+    plan = optimized_logical_plan(QUERIES[name](spark, SF))
+    assert "lambdafunction" not in plan.lower(), plan
+
+
 def _rdd_lineage(df) -> str:
     return df._jdf.queryExecution().toRdd().toDebugString()
 

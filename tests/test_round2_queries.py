@@ -112,9 +112,10 @@ def test_verified_window_spends_all_50_slots_on_oracles():
     registration order — the window head must match VERIFIED_WINDOW
     exactly. Policy: the six reference-parity pins at the head, then
     refresh slots that cover the queries whose plans changed. The
-    13 queries that stopped reading the deleted cross-query memo rotate
-    in; the 13 name-first members of the round-4 freshness cohort (the
-    oldest non-parity entries) rotate out."""
+    13 queries that stopped reading the deleted cross-query memo and
+    the 6 whose BPE loop or per-row lambdas went away rotate in; the
+    19 name-first unchanged members of the round-4 freshness cohort
+    (the oldest non-parity entries) rotate out."""
     from p6__mapreduce_spark.queries import QUERIES, VERIFIED_WINDOW, get_oracle_sql
 
     keys = list(QUERIES)
@@ -133,11 +134,18 @@ def test_verified_window_spends_all_50_slots_on_oracles():
         "silhouette_by_cluster", "ann_recall_audit",
     }
     assert changed <= set(VERIFIED_WINDOW)
-    # eviction boundary: the first and 13th r4 members by name left,
-    # the 14th and the last stayed
+    # every query whose BPE loop or per-row lambda went away is in too
+    assert {
+        "bpe_learn_merges", "bpe_fertility", "approx_stats",
+        "hll_user_audit", "sketch_weekly_users", "bootstrap_mean_ci",
+    } <= set(VERIFIED_WINDOW)
+    # eviction boundary: the first and 19th unchanged r4 members by
+    # name left, the 20th and the last stayed
     assert "append_finalized_windows_streaming" not in VERIFIED_WINDOW
     assert "group_kfold_splits" not in VERIFIED_WINDOW
-    assert "grouping_sets_explicit" in VERIFIED_WINDOW
+    assert "grouping_sets_explicit" not in VERIFIED_WINDOW
+    assert "multimodal_resize" not in VERIFIED_WINDOW
+    assert "ntile_price_quartiles" in VERIFIED_WINDOW
     assert "winsorized_event_values" in VERIFIED_WINDOW
     assert "bigram_perplexity" in VERIFIED_WINDOW
     # pinned mode restored (r7's one-round disjoint assertion flipped

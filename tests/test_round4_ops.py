@@ -187,13 +187,36 @@ def test_bpe_learns_expected_merges(spark):
     ]
 
 
-def test_bpe_merge_fold_leftmost_nonoverlapping(spark):
+def test_bpe_merge_pair_leftmost_nonoverlapping():
     # 'aaa' under merge (a,a) must become [aa, a], never [a, aa] or [aaa]
-    from p6__mapreduce_spark.operators.bpe import _merge_fold
+    from p6__mapreduce_spark.operators.bpe import _merge_pair
 
-    df = spark.createDataFrame([(["a", "a", "a"],)], "syms array<string>")
-    out = df.select(_merge_fold("syms", "a", "a").alias("m")).collect()[0].m
-    assert out == ["aa", "a"]
+    assert _merge_pair(["a", "a", "a"], "a", "a") == ["aa", "a"]
+    assert _merge_pair(["a", "a", "a", "a"], "a", "a") == ["aa", "aa"]
+    assert _merge_pair(["a", "b", "a"], "a", "a") == ["a", "b", "a"]
+
+
+def test_bpe_learn_merges_job_count_independent_of_num_merges(spark):
+    # the merge rounds run on the driver over the collected vocabulary,
+    # so more merges must not mean more Spark jobs
+    from p6__mapreduce_spark.operators.bpe import bpe_learn_merges
+    from p6__mapreduce_spark.sources.readers import load_table
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    sc = spark.sparkContext
+
+    def jobs(num_merges: int) -> int:
+        group = f"bpe-job-count-{num_merges}"
+        sc.setJobGroup(group, "bpe job count")
+        try:
+            merges = bpe_learn_merges(spark, docs, num_merges=num_merges)
+            assert merges.count() == num_merges
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    few, many = jobs(2), jobs(8)
+    assert few > 0 and few == many, (few, many)
 
 
 def test_bpe_stops_when_no_pairs_remain(spark):
