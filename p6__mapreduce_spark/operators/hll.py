@@ -5,7 +5,7 @@ query built on it could only ever get a rows-only driver check. This
 module is the portable replacement — since r9 EVERY estimator query
 (``approx_stats`` via :func:`approx_stats_portable`,
 ``sketch_weekly_users`` via the m=1024 rollup below) runs on it and
-is hash-verified against DuckDB; ``_ROWS_ONLY`` is empty. The
+is hash-verified against DuckDB, like every registered query. The
 register array is built from the repo's engine-portable affine hash,
 every register value is an exact integer max, and the harmonic-mean
 denominator Z = Σ 2^-r is carried as the exact int64 numerator

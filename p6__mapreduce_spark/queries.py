@@ -3494,47 +3494,50 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The driver compares Spark vs oracle at this scale factor; knn_ivf's
-# oracle embeds centroids trained (reproducibly, Spark-free) on the
-# sf dir's own data, so it is generated on demand per sf dir rather
-# than registered statically.
+# The driver compares Spark vs oracle at this scale factor.
 ORACLE_SF_DIR = "/root/testdata/sf0.01"
+
+# Oracles generated per sf dir: their SQL embeds model literals (IVF
+# centroids, hyperplanes) trained, reproducibly and Spark-free, on that
+# dir's own embeddings, so they cannot be registered as static strings.
+GENERATED_ORACLES = frozenset(
+    {"knn_ivf", "semantic_dedup", "cluster_medoids", "silhouette_by_cluster", "ann_recall_audit"}
+)
 
 
 def get_oracle_sql(sf_dir: str = ORACLE_SF_DIR) -> dict[str, str]:
+    """Every registered query's DuckDB SQL for ``sf_dir``. Without
+    ``embeddings.parquet`` there the GENERATED_ORACLES are absent; a
+    generator that fails raises."""
+    import os as _os
+
     out = dict(ORACLE_SQL)
-    try:
-        from p6__mapreduce_spark.similarity.ivf import knn_ivf_oracle_sql
+    emb = f"{sf_dir}/embeddings.parquet"
+    if not _os.path.exists(emb):
+        return out
+    from p6__mapreduce_spark.dedup.semantic import (
+        cluster_medoids_oracle_sql,
+        semantic_dedup_oracle_sql,
+    )
+    from p6__mapreduce_spark.similarity.ivf import knn_ivf_oracle_sql
+    from p6__mapreduce_spark.similarity.silhouette import silhouette_oracle_sql
 
-        out["knn_ivf"] = knn_ivf_oracle_sql(
-            f"{sf_dir}/embeddings.parquet", k=5, query_filter="vec_id < 16"
-        )
-    except Exception:  # parquet absent -> knn_ivf stays rows-only
-        pass
-    try:
-        from p6__mapreduce_spark.dedup.semantic import semantic_dedup_oracle_sql
+    ivf_sql = knn_ivf_oracle_sql(emb, k=5, query_filter="vec_id < 16")
+    generated = {
+        "knn_ivf": ivf_sql,
+        "semantic_dedup": semantic_dedup_oracle_sql(emb),
+        "cluster_medoids": cluster_medoids_oracle_sql(emb),
+        "silhouette_by_cluster": silhouette_oracle_sql(emb, n_centroids=16),
+        "ann_recall_audit": _ann_recall_oracle_sql(ivf_sql),
+    }
+    out.update({name: generated[name] for name in GENERATED_ORACLES})
+    return out
 
-        out["semantic_dedup"] = semantic_dedup_oracle_sql(f"{sf_dir}/embeddings.parquet")
-    except Exception:  # parquet absent -> semantic_dedup stays rows-only
-        pass
-    try:
-        from p6__mapreduce_spark.dedup.semantic import cluster_medoids_oracle_sql
 
-        out["cluster_medoids"] = cluster_medoids_oracle_sql(f"{sf_dir}/embeddings.parquet")
-    except Exception:  # parquet absent -> cluster_medoids stays rows-only
-        pass
-    try:
-        from p6__mapreduce_spark.similarity.silhouette import silhouette_oracle_sql
-
-        out["silhouette_by_cluster"] = silhouette_oracle_sql(
-            f"{sf_dir}/embeddings.parquet", n_centroids=16
-        )
-    except Exception:  # parquet absent -> silhouette stays rows-only
-        pass
-    if "knn_ivf" in out:
-        ivf_sql = out["knn_ivf"].replace("ORDER BY query_id, rank", "")
-        bf_sql = _KNN_BF_ORACLE.replace("ORDER BY query_id, rank", "")
-        out["ann_recall_audit"] = f"""
+def _ann_recall_oracle_sql(knn_ivf_sql: str) -> str:
+    ivf_sql = knn_ivf_sql.replace("ORDER BY query_id, rank", "")
+    bf_sql = _KNN_BF_ORACLE.replace("ORDER BY query_id, rank", "")
+    return f"""
         WITH bf AS ({bf_sql}), ivf AS ({ivf_sql}),
         hits AS (
           SELECT b.query_id, b.neighbor_id
@@ -3546,7 +3549,6 @@ def get_oracle_sql(sf_dir: str = ORACLE_SF_DIR) -> dict[str, str]:
         LEFT JOIN hits h ON h.query_id = q.query_id
         GROUP BY 1 ORDER BY 1
         """
-    return out
 
 
 _JACCARD_CROSS = """
@@ -5187,7 +5189,8 @@ def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on oracle-backed queries, prioritized reference parity -> text/corpus
 # pipeline -> dedup/ANN -> representative analytics. Everything NOT
 # listed keeps its file registration order after the window and is
-# covered by the committed full-registry run (ORACLE_LOCAL_r3.txt).
+# covered by the full-registry sweep of tools/oracle_check.py (the r3
+# run: `git show 57cc720:ORACLE_LOCAL_r3.txt`).
 
 def _decay_table_q6(half_life_days: int = 30, max_days: int = 2500) -> list[int]:
     """floor(1e6 * 0.5^(d / half_life)) for d in 0..max_days — computed
@@ -5542,7 +5545,8 @@ def q_multi_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join + residual exact time filter (operators/rangejoin.py:
     conversion_window_pairs) — so a Zipfian hot user's clicks x
     purchases cross product never lands in one task (user_id-only
-    join: 10x at the r10 skew audit's 50%-hot key, SKEW_AUDIT_r10).
+    join: 10x at the r10 skew audit's 50%-hot key; provenance
+    `git show 57cc720:SKEW_AUDIT_r10.txt`).
     Per-pair credit is INTEGER division into micro-cents, so the
     final sums are exact at any partitioning. The conversion-window
     semantics mirror the streaming click->purchase interval join's
@@ -5706,9 +5710,10 @@ def q_position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     marketers actually compare against linear. Same user-keyed range
     join as multi_touch_attribution — the keyed bin-bucket shape of
     operators/rangejoin.py: conversion_window_pairs, hot-key safe per
-    SKEW_AUDIT_r10 — plus ONE positional window per purchase (bounded
-    by touches-per-conversion); credit in exact integer micro-cents
-    with the middle share integer-divided."""
+    the r10 skew audit (`git show 57cc720:SKEW_AUDIT_r10.txt`) — plus
+    ONE positional window per purchase (bounded by
+    touches-per-conversion); credit in exact integer micro-cents with
+    the middle share integer-divided."""
     from pyspark.sql import Window
 
     from p6__mapreduce_spark.operators.rangejoin import conversion_window_pairs
@@ -9516,30 +9521,8 @@ def _apply_registration_order() -> None:
     missing = [n for n in VERIFIED_WINDOW if n not in QUERIES]
     if missing:
         raise RuntimeError(f"VERIFIED_WINDOW names unknown queries: {missing}")
-    # Two DISTINCT exemption classes (r7 ADVICE: don't conflate them —
-    # future rows-only queries must not slip in under the "generated"
-    # label):
-    # _GENERATED: TRUE per-sf-dir oracles built in get_oracle_sql()
-    # (trained model literals depend on the data, so the SQL can't be a
-    # static string).
-    _GENERATED = {
-        "knn_ivf",
-        "semantic_dedup",
-        "ann_recall_audit",
-        "cluster_medoids",
-        "silhouette_by_cluster",
-    }
-    # _ROWS_ONLY: inherently non-reproducible estimators (engine-private
-    # sketch layouts) that take the weaker rows-only driver check.
-    # EMPTY since r9: approx_stats — the last such query — moved to the
-    # portable register sketch + fixed price grid (operators/hll.py),
-    # the same treatment that made sketch_weekly_users hash-verifiable
-    # in r8. The registry is now 275/275 hash-oracled.
-    _ROWS_ONLY: set[str] = set()
     no_oracle = [
-        n
-        for n in VERIFIED_WINDOW
-        if n not in ORACLE_SQL and n not in _GENERATED and n not in _ROWS_ONLY
+        n for n in VERIFIED_WINDOW if n not in ORACLE_SQL and n not in GENERATED_ORACLES
     ]
     if no_oracle:
         raise RuntimeError(f"VERIFIED_WINDOW entries lack oracles: {no_oracle}")

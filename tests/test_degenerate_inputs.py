@@ -3,7 +3,8 @@
 An empty input is not hypothetical at 100 TB: a date-pruned partition,
 a filtered source, or a fresh ingest root all produce zero-row frames
 through the same plans. The contract, established by the r8 ADVICE
-hilbert fix and swept registry-wide in r9 (EMPTY_AUDIT_r9.txt):
+hilbert fix and swept registry-wide in r9 (the audit's per-query
+record: `git show 57cc720:EMPTY_AUDIT_r9.txt`):
 
 - transforms/aggregations return exactly what the DuckDB oracle
   returns on the same empty tables (empty frame, or a 1-row aggregate
@@ -110,9 +111,10 @@ def test_minhash_geometry_probe_empty_qualifies_is_boolean(spark):
 def test_spark_grouping_sets_empty_input_divergence_pinned(spark):
     """Spark emits NO grand-total row for cube/rollup/grouping-sets on
     an empty input; ANSI SQL (and DuckDB) emit one ((), COUNT=0). The
-    engine difference is documented in EMPTY_AUDIT_r9.txt — this pin
-    fails if a Spark upgrade changes the behavior, so the audit doc
-    and the three affected queries get revisited."""
+    engine difference is documented in the r9 empty-input audit
+    (`git show 57cc720:EMPTY_AUDIT_r9.txt`) — this pin fails if a Spark
+    upgrade changes the behavior, so the three affected queries get
+    revisited."""
     spark.createDataFrame([], "a string, b string").createOrReplaceTempView(
         "_empty_gs"
     )

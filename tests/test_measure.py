@@ -1,5 +1,6 @@
-"""tools/measure.py times the full result, bench.py times through it,
-and tools/ab_pins.py notices an arm that a query never reaches."""
+"""tools/measure.py times the full result and releases the query's
+pins, bench.py times through it, and tools/ab_pins.py notices an arm
+that a query never reaches."""
 
 import os
 import sys
@@ -32,6 +33,21 @@ def test_timed_forces_the_full_result(spark, monkeypatch):
     errors: dict[str, str] = {}
     assert bench._time(spark, "boom", SF, errors) is None
     assert "boom" in errors["boom"]
+
+
+def test_timed_unpersists_the_pins_of_the_query(spark):
+    from p6__mapreduce_spark.functions.pin import pin
+
+    pinned = []
+
+    def pins(spark_, _sf_dir):
+        pinned.append(pin(spark_.range(10)))
+        return pinned[0].union(pinned[0])
+
+    measure.timed(spark, pins, SF)
+    assert pinned
+    level = pinned[0].storageLevel
+    assert not (level.useMemory or level.useDisk), level
 
 
 @needs_data

@@ -1,33 +1,8 @@
 #!/usr/bin/env python3
-"""Doc-drift gate: narrative claims must match the code's reality.
+"""Doc-drift gate: COVERAGE.md's "<N> registered queries" footer must
+equal len(QUERIES). Fast: no Spark session.
 
-Two checks, both fast (no Spark session):
-
-1. COVERAGE.md's "<N> registered queries" footer == len(QUERIES)
-   (r4 verdict #5 — the coverage doc sat at 138 while the registry hit
-   173; moved here verbatim from the inline release_gate check).
-
-2. rows-only prose drift (r9 verdict "What's wrong" #4): the module
-   docstring of operators/hll.py kept describing approx_stats as a
-   rows-only HLL++ query for a full round after the portable-sketch
-   rewrite made it hash-oracled, because nothing machine-checked prose
-   against the actual ``_ROWS_ONLY`` set. This check scans every
-   source line that mentions "rows-only" and requires it to agree with
-   the set:
-
-   - if ``_ROWS_ONLY`` is empty (the state since r9), every mention
-     must be HISTORICAL or DEFINITIONAL — the line or its +-2-line
-     window must carry a supersession / past-tense / mechanism marker
-     (SUPERSEDED, "replaces", "upgraded", "audit trail", the runtime
-     fallback idiom "parquet absent", ...). A bare current-tense claim
-     like "gets only a rows-only driver check" fails the gate — which
-     is exactly the sentence that went stale in r9.
-   - if a query name from the registry appears in ``_ROWS_ONLY``,
-     current-tense mentions naming that query are exempt.
-
-   The marker list is a gate, not a style guide: it is deliberately
-   permissive for clearly-flagged history and strict for the failure
-   mode that actually happened (an unflagged present-tense claim).
+Usage: python tools/doc_drift.py
 """
 
 from __future__ import annotations
@@ -38,75 +13,6 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-
-# Files whose prose is load-bearing for a reader of the CODE. Markdown
-# round-logs (VERDICT/COVERAGE/BENCH_NOTES) narrate history by design
-# and are excluded.
-SOURCE_GLOBS = ("p6__mapreduce_spark", "tools", "bench.py", "__spark_entry__.py")
-
-# A "rows-only" mention is acceptable when its +-2-line window matches
-# any of these (word-boundary) markers: supersession/past-tense flags,
-# definitional references to the set itself, or the runtime-fallback /
-# formatter idioms of the checker tools.
-MARKERS = [
-    r"SUPERSEDED",
-    r"superseded",
-    r"then-?\s?rows-only",
-    r"\breplac(es|ed|ing)\b",
-    r"\bupgraded\b",
-    r"\bgained\b",
-    r"\blanded\b",
-    r"\btook\b",
-    r"\bwas\b",
-    r"\bwere\b",
-    r"audit trail",
-    r"_ROWS_ONLY",
-    r"\bcould only\b",
-    r"\bcan only\b",
-    r"\bmust not\b",
-    r"parquet absent",
-    r"rows-only path",
-    r"\bconflates\b",
-    r"no longer",
-    r"hash-oracled",
-    r"hash-verif",
-    r"\bempty\b",
-    # checker-tool mechanics (computed status strings, match predicates)
-    r'"rows-only"',
-    r"'rows-only'",
-    r": rows-only,",  # oracle_check's runtime fallback status line
-    r"\bconvention\b",  # the rotation rule ("rows-only rows count as driver rows")
-]
-_MARKER_RE = re.compile("|".join(MARKERS))
-
-
-def _rows_only_set() -> set[str]:
-    """Parse the literal ``_ROWS_ONLY`` assignment out of queries.py.
-
-    It is a function-local, so read the source (the advice gate pins
-    the same line by regex — tools/advice_check.py)."""
-    src = open(os.path.join(ROOT, "p6__mapreduce_spark", "queries.py")).read()
-    m = re.search(r"_ROWS_ONLY: set\[str\] = (set\(\)|\{[^}]*\})", src)
-    if not m:
-        raise SystemExit("doc-drift: cannot find the _ROWS_ONLY literal in queries.py")
-    body = m.group(1)
-    if body == "set()":
-        return set()
-    return set(re.findall(r'"([^"]+)"', body))
-
-
-def _source_files() -> list[str]:
-    out = []
-    for g in SOURCE_GLOBS:
-        p = os.path.join(ROOT, g)
-        if os.path.isfile(p):
-            out.append(p)
-            continue
-        for dirpath, _dirnames, filenames in os.walk(p):
-            out.extend(
-                os.path.join(dirpath, f) for f in filenames if f.endswith(".py")
-            )
-    return sorted(out)
 
 
 def check_coverage_footer() -> str:
@@ -120,48 +26,8 @@ def check_coverage_footer() -> str:
     return f"COVERAGE.md == registry == {n}"
 
 
-def scan_lines(lines: list[str], rows_only: set[str]) -> tuple[int, list[int]]:
-    """Return (mention_count, offending 0-based line indices)."""
-    n_mentions = 0
-    offending: list[int] = []
-    for i, line in enumerate(lines):
-        if "rows-only" not in line and "rows_only" not in line.lower():
-            continue
-        n_mentions += 1
-        window = "\n".join(lines[max(0, i - 2) : i + 3])
-        if _MARKER_RE.search(window):
-            continue
-        if rows_only and any(q in window for q in rows_only):
-            continue  # names a query that genuinely IS rows-only
-        offending.append(i)
-    return n_mentions, offending
-
-
-def check_rows_only_prose() -> str:
-    rows_only = _rows_only_set()
-    me = os.path.abspath(__file__)
-    bad: list[str] = []
-    n_mentions = 0
-    for path in _source_files():
-        if os.path.abspath(path) == me:
-            continue  # this gate's own docstring narrates the rule
-        lines = open(path).read().splitlines()
-        n, offending = scan_lines(lines, rows_only)
-        n_mentions += n
-        rel = os.path.relpath(path, ROOT)
-        bad.extend(f"{rel}:{i + 1}: {lines[i].strip()}" for i in offending)
-    if bad:
-        raise SystemExit(
-            "doc-drift: present-tense rows-only claims with _ROWS_ONLY="
-            f"{sorted(rows_only) or '{}'}:\n  " + "\n  ".join(bad)
-        )
-    return f"{n_mentions} rows-only mentions all historical/definitional (_ROWS_ONLY={sorted(rows_only) or '{}'})"
-
-
 def main() -> None:
-    a = check_coverage_footer()
-    b = check_rows_only_prose()
-    print(f"doc-drift OK: {a}; {b}")
+    print(f"doc-drift OK: {check_coverage_footer()}")
 
 
 if __name__ == "__main__":

@@ -27,33 +27,19 @@ def first_sentence(doc: str | None) -> str:
 def main() -> None:
     from bench import HEADLINE, PROTOCOL_RUNNERS
 
-    from p6__mapreduce_spark.queries import ORACLE_SQL, QUERIES, VERIFIED_WINDOW
+    from p6__mapreduce_spark.queries import GENERATED_ORACLES, ORACLE_SQL, QUERIES, VERIFIED_WINDOW
 
-    # these oracles are generated per sf-dir (plan-literal centroids /
-    # hyperplanes) rather than registered as static strings
-    oracled = set(ORACLE_SQL) | {
-        "knn_ivf",
-        "semantic_dedup",
-        "ann_recall_audit",
-        "cluster_medoids",
-        "silhouette_by_cluster",
-    }
+    oracled = set(ORACLE_SQL) | GENERATED_ORACLES
     window = set(VERIFIED_WINDOW)
     benched = set(HEADLINE) | set(PROTOCOL_RUNNERS)
-    n_unoracled = len(QUERIES) - len(oracled & set(QUERIES))
-    oracle_note = (
-        "(every registered query is hash-oracled — _ROWS_ONLY empty since r9)."
-        if n_unoracled == 0
-        else f"({n_unoracled} rows are engine-specific estimators checked rows-only)."
-    )
     lines = [
         "# QUERIES — registry index (generated by tools/gen_query_index.py)",
         "",
-        f"{len(QUERIES)} registered queries; {len(oracled)} with DuckDB oracle SQL",
-        oracle_note,
+        f"{len(QUERIES)} registered queries; {len(oracled & set(QUERIES))} with DuckDB oracle SQL",
+        f"({len(GENERATED_ORACLES)} of them generated per sf dir).",
         "Driver window = the 50 registrations the external harness verifies per",
-        "round; every query regardless of window carries committed local oracle",
-        "evidence at sf0.01 and sf0.1 (ORACLE_LOCAL_r*.txt).",
+        "round; tools/oracle_check.py hash-checks every registered query at a",
+        "given sf dir (past sweeps: `git show 57cc720:ORACLE_LOCAL_r11_sf0.1.txt`).",
         "",
         "| query | oracle | driver window | benched | what it does |",
         "|---|---|---|---|---|",
@@ -63,7 +49,7 @@ def main() -> None:
         lines.append(
             "| {} | {} | {} | {} | {} |".format(
                 name,
-                "✓" if name in oracled else "rows-only",
+                "✓" if name in oracled else "",
                 "✓" if name in window else "",
                 "✓" if name in benched else "",
                 first_sentence(fn.__doc__).replace("|", "\\|"),

@@ -1,15 +1,16 @@
 #!/usr/bin/env python3
 """One-command release gate: the full verification recipe in order.
 
-1. driver-contract smoke (entry() rows + queries()/oracle_sql() shape)
-2. doc-drift (COVERAGE.md query count == registry; rows-only prose
-   agrees with the actual _ROWS_ONLY set — tools/doc_drift.py) and
-   advice-drift (every ADVICE.md item resolved + verified —
-   tools/advice_check.py)
+1. driver-contract smoke (entry() rows; oracle_sql() has one entry per
+   query in queries())
+2. doc-drift (COVERAGE.md query count == registry — tools/doc_drift.py)
+   and advice-drift (every ADVICE.md item names a pytest node that
+   collects — tools/advice_check.py)
 3. plan audit (writes PLANS.md; fails on any non-exempt cartesian /
    Python-in-plan)
-4. DuckDB oracle sweep at the given sf dir (every registered query)
-5. pytest (the whole suite)
+4. DuckDB oracle sweep at the given sf dir (every registered query; a
+   query without an oracle fails)
+5. pytest (the whole suite, which runs the advice-drift nodes)
 
 Stops at the first failing stage and exits non-zero; prints one
 summary line per stage so CI logs read at a glance. This is the
@@ -48,18 +49,14 @@ def main() -> None:
         "import __spark_entry__ as e;"
         "from p6__mapreduce_spark.session import get_session;"
         "s=get_session('gate');df=e.entry(s);assert df.collect();"
-        "q=e.queries();o=e.oracle_sql();assert set(o)<=set(q);"
+        "q=e.queries();o=e.oracle_sql();assert set(o)==set(q);"
         "print(f'contract OK: {len(q)} queries, {len(o)} oracles')"
     )
     stage("contract", [sys.executable, "-c", smoke])
-    # doc-drift (tools/doc_drift.py): COVERAGE.md query-count footer
-    # (r4 verdict #5) + rows-only prose vs the actual _ROWS_ONLY set
-    # (r9 verdict #4 — docstrings described approx_stats as rows-only
-    # for a round after the portable sketch made it hash-oracled)
+    # COVERAGE.md's query-count footer matches the registry
     stage("doc-drift", [sys.executable, "tools/doc_drift.py"])
-    # advice-drift check (r7 verdict #3): every ADVICE.md item must
-    # have a recorded+verified resolution in tools/advice_check.py, so
-    # the advisory file can't silently go stale between rounds
+    # every ADVICE.md item names the test that fails if its defect
+    # comes back, so the advisory file can't go stale between rounds
     stage("advice-drift", [sys.executable, "tools/advice_check.py"])
     stage("plan-audit", [sys.executable, "tools/plan_audit.py"])
     stage("oracle", [sys.executable, "tools/oracle_check.py", sf_dir])
